@@ -48,8 +48,8 @@ class AmazonRdsMySqlSpec(OnlineStoreSpec):
     password[, database]) exactly as the reference constructs it (SO:384).
 
     The MySQL session is forced into ANSI_QUOTES so the incremental
-    publish's quoted-identifier DELETEs parse (the writer quotes column
-    names with ANSI double quotes)."""
+    publish's quoted-identifier DELETE/INSERT statements parse (the writer
+    quotes column names with ANSI double quotes)."""
 
     def __init__(
         self,

@@ -73,6 +73,14 @@ class FeatureTableMeta:
         return self.keys + [t for t in self.timestamp_keys if t not in self.keys]
 
 
+def version_schema(meta: FeatureTableMeta, version: int) -> str | None:
+    """Spark schema JSON that ``version`` of the table was written with, or
+    None for a version published before schemas were recorded."""
+    schemas = (meta.properties or {}).get("version_schemas", {})
+    recorded = [int(v) for v in schemas if int(v) <= version]
+    return schemas[str(max(recorded))] if recorded else None
+
+
 class Registry:
     """Filesystem-backed catalog of :class:`FeatureTableMeta` documents."""
 
@@ -175,6 +183,13 @@ class Registry:
             cur.properties.setdefault("version_history", {})[
                 str(cur.current_version)
             ] = time.time()
+            # the written schema lets readers skip parquet schema inference
+            # (writer.read_snapshot); recorded only where it changes, so the
+            # document grows with schema evolutions, not with commits
+            if version_schema(cur, cur.current_version - 1) != schema_json:
+                cur.properties.setdefault("version_schemas", {})[
+                    str(cur.current_version)
+                ] = schema_json
             if properties_update:
                 cur.properties.update(properties_update)
             self._write(cur)

@@ -11,11 +11,10 @@ Semantics reproduced exactly:
   new columns appear in the result, null for rows not touched by the merge;
 - **overwrite**: full replace.
 
-Physical strategy: if OSS delta-spark is importable we use
+Physical strategy: :func:`merge_into_delta` wires OSS delta-spark's
 ``DeltaTable.merge`` with ``spark.databricks.delta.schema.autoMerge.enabled``
-(the transactional path for a real cluster).  In this environment Delta is not
-installed, so the engine's documented fallback runs: versioned parquet
-snapshots with last-writer-wins resolution —
+(the transactional path for a real cluster).  The client writes versioned
+parquet snapshots with last-writer-wins resolution —
 
     read target vN  ->  unionByName(allowMissingColumns=True) with a
     writer-priority column  ->  row_number() over (partition by keys
@@ -34,20 +33,14 @@ is the one to enable — same API, one config.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from .registry import FeatureTableMeta, Registry
-
-try:  # OSS delta-spark, optional (not installed in this harness)
-    from delta.tables import DeltaTable  # type: ignore
-
-    _HAVE_DELTA = True
-except Exception:  # pragma: no cover - absence is the tested path here
-    DeltaTable = None
-    _HAVE_DELTA = False
+from .registry import FeatureTableMeta, Registry, version_schema
 
 
 def _version_dir(table_dir: str, version: int) -> str:
@@ -89,7 +82,11 @@ def read_snapshot(
             f"vacuum_snapshots; only versions still on disk are readable "
             f"(current: v{meta.current_version})"
         )
-    return spark.read.parquet(vdir)
+    schema_json = version_schema(meta, version)
+    if schema_json is None:  # published before schemas were recorded
+        return spark.read.parquet(vdir)
+    # the recorded schema spares the parquet footer-inference job
+    return spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(vdir)
 
 
 def _resolve_as_of(meta: FeatureTableMeta, as_of: float | str) -> int:
@@ -276,72 +273,6 @@ def _normalize_expectations(expectations: dict) -> dict[str, tuple[str, str]]:
     return out
 
 
-def _apply_expectations(df: DataFrame, expectations: dict, table: str) -> DataFrame:
-    """CHECK-constraint enforcement with DLT-expectation actions, evaluated
-    against the write RESULT in ONE aggregate pass (NULL predicate results
-    count as violations — unknown-as-fail for data-quality purposes):
-
-    - ``fail`` (default / plain-string form): any violation rejects the
-      whole write atomically, with per-expectation counts;
-    - ``drop``: violating rows are removed from the written snapshot (note
-      this is table-state semantics — a previously-written row violating a
-      drop expectation is dropped at the next write, exactly as a new CHECK
-      constraint re-validates existing data);
-    - ``warn``: violations are counted and surfaced as a RuntimeWarning;
-      the write proceeds untouched.
-
-    A predicate that does not resolve against the frame (e.g. names a column
-    that exists in neither target nor source) rejects the write with a clear
-    per-expectation ValueError instead of an opaque AnalysisException."""
-    import warnings
-
-    norm = _normalize_expectations(expectations)
-    aggs = []
-    for name, (pred, _action) in norm.items():
-        try:  # analysis-only plan build: no job runs
-            df.select(F.expr(pred).cast("boolean"))
-        except Exception as exc:
-            raise ValueError(
-                f"expectation {name!r} on {table} is not evaluable against "
-                f"the write result (predicate {pred!r}: "
-                f"{exc.__class__.__name__}); fix the predicate or drop the "
-                f"expectation"
-            ) from exc
-        aggs.append(
-            F.sum(
-                F.when(
-                    F.coalesce(F.expr(pred).cast("boolean"), F.lit(False)), 0
-                ).otherwise(1)
-            ).alias(name)
-        )
-    row = df.agg(*aggs).first()
-    bad_fail = {
-        n: row[n] for n, (_p, a) in norm.items() if a == "fail" and row[n]
-    }
-    if bad_fail:
-        raise ValueError(
-            f"write to {table} violates expectation(s) {bad_fail} "
-            f"(rows failing each predicate); fix the source or drop the "
-            f"expectation"
-        )
-    bad_warn = {
-        n: row[n] for n, (_p, a) in norm.items() if a == "warn" and row[n]
-    }
-    if bad_warn:
-        warnings.warn(
-            f"write to {table} has expectation warning(s) {bad_warn} "
-            f"(rows failing each predicate; write proceeds)",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    drop_preds = [
-        p for n, (p, a) in norm.items() if a == "drop" and row[n]
-    ]
-    for pred in drop_preds:
-        df = df.where(F.coalesce(F.expr(pred).cast("boolean"), F.lit(False)))
-    return df
-
-
 def _merge_frames_validated(
     target: DataFrame, source: DataFrame, keys: list[str]
 ):
@@ -424,9 +355,9 @@ def _apply_expectations_observed(
     separate aggregate job; ``drop`` predicates filter inline
     (unconditionally — filtering zero violating rows is the identity).
     ``fail``/``warn`` adjudicate in :func:`_check_expectation_metrics`
-    after the write, before publish — same outcomes as the eager form.
+    after the write, before publish, so a rejected write never publishes.
 
-    Unevaluable predicates still reject at plan-build time with the same
+    Unevaluable predicates reject at plan-build time with a
     per-expectation ValueError."""
     from pyspark.sql import Observation
 
@@ -465,9 +396,9 @@ def _apply_expectations_observed(
 def _check_expectation_metrics(
     metrics: dict, expectations: dict, table: str
 ) -> None:
-    """Post-write adjudication of :func:`_apply_expectations_observed`:
-    same error/warning text as the eager form, driven by the observed
-    counts."""
+    """Post-write adjudication of :func:`_apply_expectations_observed`,
+    driven by the observed counts: ``fail`` violations raise, ``warn``
+    violations raise a RuntimeWarning."""
     import warnings
 
     norm = _normalize_expectations(expectations)
@@ -511,10 +442,6 @@ def _merge_frames(target: DataFrame, source: DataFrame, keys: list[str]) -> Data
         .where(F.col("__rn") == 1)
         .drop(prio, "__rn")
     )
-
-
-def delta_available() -> bool:
-    return _HAVE_DELTA
 
 
 def compact_snapshot(

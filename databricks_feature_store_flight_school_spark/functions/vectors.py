@@ -32,11 +32,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, d / denom)
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    diff = F.zip_with(a, b, lambda x, y: x - y)
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
 def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
     """Random-hyperplane LSH bucket id: bit i = sign(vec · plane_i).
 

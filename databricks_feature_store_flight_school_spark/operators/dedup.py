@@ -811,9 +811,9 @@ def incremental_dedup(
     never matches a NULL key, so that survivor is always accepted — filter
     NULL/empty text upstream (the C4-clean pass does) if that's not wanted.
     Ids are assumed unique across batch and index (standard for ingestion
-    ids); a batch id equal to an index id would not corrupt joins (the two
-    sides are attached from separate frames) but makes the output ambiguous
-    to consumers.
+    ids); a batch id equal to an index id would not corrupt joins (each
+    candidate pair carries a ``__src`` tag that resolves its second side to
+    the index or the batch) but makes the output ambiguous to consumers.
     """
     _require_cols(index, DEDUP_INDEX_PARAM_COLS, "dedup index")
     checked_index = index.where(

@@ -403,6 +403,67 @@ def test_read_table_time_travel(spark, client):
         client.read_table("ttab", version=9)
 
 
+def test_time_travel_across_schema_evolving_merge(spark, client):
+    """Every version reads back with the columns and types it was written
+    with: the schema each publish records drives the read, and a version
+    without a record (published before schemas were recorded) falls back to
+    parquet inference."""
+    client.create_feature_table(
+        "evo", keys="k", df=spark.createDataFrame([Row(k=1, a=1), Row(k=2, a=2)])
+    )
+    client.write_table(  # adds b, widens a to double
+        "evo", spark.createDataFrame([Row(k=2, a=2.5, b="x")]), mode="merge"
+    )
+    client.delete_from_table("evo", spark.createDataFrame([Row(k=1)]))
+
+    def shape(version):
+        df = client.read_table("evo", version=version)
+        return df.dtypes, sorted(tuple(r) for r in df.collect())
+
+    v1 = ([("k", "bigint"), ("a", "bigint")], [(1, 1), (2, 2)])
+    v2 = (
+        [("k", "bigint"), ("a", "double"), ("b", "string")],
+        [(1, 1.0, None), (2, 2.5, "x")],
+    )
+    v3 = (v2[0], [(2, 2.5, "x")])
+    assert [shape(v) for v in (1, 2, 3)] == [v1, v2, v3]
+    # recorded where the schema changed, not per commit
+    meta = client.get_feature_table("evo")
+    assert sorted(meta.properties["version_schemas"]) == ["1", "2"]
+
+    meta.properties.pop("version_schemas")
+    client.registry.update(meta)
+    assert [shape(v) for v in (1, 2, 3)] == [v1, v2, v3]
+
+
+def test_partitioned_table_keeps_column_order(spark, client):
+    """A partitioned table reads back with its partition columns last, as
+    parquet discovery orders them, and with the types they were written
+    with (discovery alone would read the bigint ``yr`` back as int)."""
+    client.create_feature_table(
+        "parts", keys="k",
+        df=spark.createDataFrame([
+            Row(k=1, region="a", yr=2020, x=1.5),
+            Row(k=2, region="b", yr=2021, x=2.5),
+        ]),
+        partition_columns=["region", "yr"],
+    )
+    client.write_table(
+        "parts",
+        spark.createDataFrame([Row(k=3, region="a", yr=2022, x=3.5)]),
+        mode="merge",
+    )
+    for version in (1, 2):
+        df = client.read_table("parts", version=version)
+        assert df.dtypes == [
+            ("k", "bigint"), ("x", "double"), ("region", "string"),
+            ("yr", "bigint"),
+        ]
+    assert sorted(tuple(r) for r in client.read_table("parts").collect()) == [
+        (1, 1.5, "a", 2020), (2, 2.5, "b", 2021), (3, 3.5, "a", 2022),
+    ]
+
+
 def test_lookup_join_broadcasts_feature_table(spark, client):
     """The lookup planner must put the feature table on a broadcast exchange
     (the fact-side input never shuffles for retrieval)."""

@@ -4,6 +4,7 @@ partition pruning on read-back."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from databricks_feature_store_flight_school_spark.sources import load_table
@@ -490,3 +491,124 @@ def test_online_store_spec_publish(spark, tmp_path):
         fs.publish_table("spec_feat", durl, online_store=spec)
     with pytest.raises(ValueError, match="jdbc_url= or online_store="):
         fs.publish_table("spec_feat")
+
+
+def _derby_query(spark, url, sql):
+    """Run one statement on the Derby database behind ``url`` (in-JVM)."""
+    jvm = spark._jvm
+    jvm.java.lang.Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
+    conn = jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        conn.createStatement().execute(sql)
+    finally:
+        conn.close()
+
+
+def test_publish_incremental_string_key(spark, tmp_path):
+    """Incremental sync of a table keyed by the telco flow's string
+    ``customerID`` (``NNNNNNN-CUST``): the mirror's key is a VARCHAR, not
+    the CLOB a string becomes by default on Derby (which no DELETE can
+    compare), through bootstrap, update, insert and delete."""
+    from pyspark.sql import Row
+
+    from databricks_feature_store_flight_school_spark.featurestore import (
+        EmbeddedDerbySpec, FeatureStoreClient,
+    )
+
+    fs = FeatureStoreClient(spark, str(tmp_path / "wh"))
+    fs.create_feature_table(
+        "svc", keys="customerID",
+        df=spark.createDataFrame([
+            Row(customerID=f"{i:07d}-CUST", plan="basic", charges=float(i))
+            for i in range(1, 5)
+        ]),
+    )
+    spec = EmbeddedDerbySpec(f"{tmp_path}/str_db")
+    url, props = spec.jdbc_options()
+
+    def online():
+        back = (
+            spark.read.format("jdbc").option("url", url)
+            .option("dbtable", "svc").options(**props).load()
+        )
+        assert dict(back.dtypes)["customerID"] == "string"
+        return {r["customerID"]: (r["plan"], r["charges"]) for r in back.collect()}
+
+    fs.publish_table("svc", online_store=spec, mode="incremental")  # bootstrap
+    assert online() == {
+        f"{i:07d}-CUST": ("basic", float(i)) for i in range(1, 5)
+    }
+
+    fs.write_table("svc", spark.createDataFrame([
+        Row(customerID="0000001-CUST", plan="premium", charges=99.5),  # update
+        Row(customerID="0000009-CUST", plan="basic", charges=9.0),  # insert
+    ]))
+    fs.delete_from_table(
+        "svc", spark.createDataFrame([Row(customerID="0000003-CUST")])
+    )
+    fs.publish_table("svc", online_store=spec, mode="incremental")
+    want = {
+        "0000001-CUST": ("premium", 99.5),
+        "0000002-CUST": ("basic", 2.0),
+        "0000004-CUST": ("basic", 4.0),
+        "0000009-CUST": ("basic", 9.0),
+    }
+    assert online() == want
+    assert {
+        r["customerID"]: (r["plan"], r["charges"])
+        for r in fs.read_table("svc").collect()
+    } == want
+
+
+def test_publish_incremental_is_atomic(spark, tmp_path):
+    """A sync that fails after its DELETE leaves the mirror exactly as it
+    was and the consumer offset where it was; the next publish converges.
+    The failure is real: a CHECK constraint on the mirror rejects the
+    INSERT of an updated row, which runs after the DELETE of its old row."""
+    from pyspark.sql import Row
+
+    from databricks_feature_store_flight_school_spark.featurestore import (
+        FeatureStoreClient,
+    )
+
+    fs = FeatureStoreClient(spark, str(tmp_path / "wh"))
+    fs.create_feature_table(
+        "atomic", keys="customer_id",
+        df=spark.createDataFrame(
+            [Row(customer_id=i, score=i / 10) for i in range(1, 5)]
+        ),
+    )
+    url = f"jdbc:derby:{tmp_path}/atomic_db;create=true"
+    props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
+
+    def online():
+        back = (
+            spark.read.format("jdbc").option("url", url)
+            .option("dbtable", "atomic").options(**props).load()
+        )
+        return {r["customer_id"]: r["score"] for r in back.collect()}
+
+    consumer = "jdbc:atomic"
+    fs.publish_table("atomic", url, mode="incremental", properties=props)
+    before = online()
+    offset = fs.registry.get_consumer_offset("atomic", consumer)
+    _derby_query(
+        spark, url,
+        'ALTER TABLE atomic ADD CONSTRAINT score_cap CHECK ("score" < 0.8)',
+    )
+    fs.write_table("atomic", spark.createDataFrame(
+        [Row(customer_id=1, score=0.9), Row(customer_id=7, score=0.7)]
+    ))
+    fs.delete_from_table("atomic", spark.createDataFrame([Row(customer_id=2)]))
+
+    with pytest.raises(Exception, match="SCORE_CAP|score_cap"):
+        fs.publish_table("atomic", url, mode="incremental", properties=props)
+    assert online() == before
+    assert fs.registry.get_consumer_offset("atomic", consumer) == offset
+
+    _derby_query(spark, url, "ALTER TABLE atomic DROP CONSTRAINT score_cap")
+    fs.publish_table("atomic", url, mode="incremental", properties=props)
+    assert online() == {1: 0.9, 3: 0.3, 4: 0.4, 7: 0.7}
+    assert fs.registry.get_consumer_offset(
+        "atomic", consumer
+    ) == fs.get_feature_table("atomic").current_version
