@@ -54,8 +54,8 @@ class FeatureStoreClient:
         and lookups may retrieve as-of a timestamp (lookups.py).
 
         ``expectations`` declares CHECK-constraint predicates — the Delta
-        table-constraint / DLT-expectation analog, enforced in one aggregate
-        pass over the MERGED write result (writer.py).  A plain-string value
+        table-constraint / DLT-expectation analog, counted by an observe()
+        riding the write over the MERGED result (writer.py).  A plain-string value
         (``{"non_negative": "balance >= 0"}``) fails violating writes
         atomically with per-expectation counts; a dict value selects the
         DLT action: ``{"predicate": "balance >= 0", "action":

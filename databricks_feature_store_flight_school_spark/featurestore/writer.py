@@ -14,29 +14,35 @@ Semantics reproduced exactly:
 Physical strategy: :func:`merge_into_delta` wires OSS delta-spark's
 ``DeltaTable.merge`` with ``spark.databricks.delta.schema.autoMerge.enabled``
 (the transactional path for a real cluster).  The client writes versioned
-parquet snapshots with last-writer-wins resolution —
+parquet snapshots, one merge form for every merge —
 
-    read target vN  ->  unionByName(allowMissingColumns=True) with a
-    writer-priority column  ->  row_number() over (partition by keys
-    order by priority desc) == 1  ->  write vN+1  ->  registry pointer flip
+    read target vN  ->  LEFT ANTI join on the source keys (null-safe)  ->
+    unionByName(allowMissingColumns=True) with the source  ->  stage  ->
+    adjudicate  ->  CAS-publish vN+1
 
-Each write lands in a fresh ``v{N}`` directory and the registry's
-``current_version`` flips atomically afterwards, so concurrent readers keep a
-consistent snapshot (non-transactional across tables, documented).
+Every write (merge, overwrite, delete, restore, compaction) commits through
+:func:`_publish`: it stages into a uniquely named directory, then the
+registry renames it to ``v{N}`` and flips ``current_version`` atomically, so
+concurrent readers keep a consistent snapshot (non-transactional across
+tables, documented).
 
-Scale notes: the union+window plan shuffles once on the primary key — the
-same key the Delta merge join would shuffle on; with the target bucketed by
-key the shuffle drops away entirely.  New-version writes rewrite the full
-snapshot (Delta would rewrite only touched files); at 100 TB the Delta path
-is the one to enable — same API, one config.
+Scale notes: the merge never shuffles the target — matched rows drop
+through the anti join (broadcast while the source slice is small), and only
+the source is shuffled on the primary key (the validation window, or
+``dropDuplicates`` under ``validate=False``).  New-version writes rewrite the
+full snapshot (Delta would rewrite only touched files); at 100 TB the Delta
+path is the one to enable — same API, one config.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
@@ -119,8 +125,11 @@ def write_snapshot(
 
     ``validate`` (default on) rejects sources Delta's MERGE would reject —
     null key columns, or several source rows for one key (whose winner would
-    otherwise be arbitrary).  Costs one small aggregate job over the source;
-    pass False only for sources already known clean.
+    otherwise be arbitrary).  Into a table with data the check rides the
+    staging write as observed metrics (no extra job on the happy path); into
+    an empty table it is one small aggregate job over the source.  With
+    ``validate=False`` one arbitrary source row per key is merged (null keys
+    match each other); pass it only for sources already known clean.
 
     ``properties_update`` lands in the registry atomically with the version
     flip (registry.publish_version) — see the materialized-view refresh for
@@ -134,37 +143,24 @@ def write_snapshot(
         raise ValueError(f"source is missing primary key column(s) {missing}")
     expectations = (getattr(meta, "properties", {}) or {}).get("expectations", {})
 
-    spark = df.sparkSession
-    table_dir = registry.table_dir(meta.name)
-    validate_obs = None
-    if mode == "merge" and meta.current_version > 0:
-        target = read_snapshot(spark, registry, meta)
-        if validate:
-            # Fused path (r14, guide §1.4/§6): source-key validation rides
-            # the write action as observe() metrics instead of a separate
-            # groupBy+collect job, and the merge itself is an anti-join +
-            # union — the TARGET is never shuffled (the union+window form
-            # re-shuffled the whole snapshot per merge; at 100 TB the
-            # broadcast-anti on a slice-sized source touches only the
-            # scan).  A violating source is detected after the staging
-            # write and REJECTED before publish — observably identical to
-            # the old eager reject (staging dirs are invisible to readers).
-            merged, validate_obs = _merge_frames_validated(
-                target, df, merge_keys
-            )
-        else:
-            # validate=False keeps the window form: its keep-one-arbitrary-
-            # row-per-duplicate-key semantics are part of the escape-hatch
-            # contract (pinned by test_merge_rejects_duplicate_and_null_
-            # source_keys)
-            merged = _merge_frames(target, df, merge_keys)
-    else:
-        merged = df
-        if validate and mode == "merge":
-            # merge into an empty table: no merge pass to ride — the
-            # separate aggregate job shuffles only (key, count) partials,
-            # far fewer bytes than a full-row window would (guide §2.3)
+    checks = []  # adjudicated after the staging write, before publish
+    merged = df
+    if mode == "merge":
+        if not validate:
+            merged = df.dropDuplicates(merge_keys)
+        elif meta.current_version == 0:
+            # no target to ride: the separate aggregate shuffles only
+            # (key, count) partials, far fewer bytes than a full-row window
+            # over the initial load would (guide §2.3)
             _validate_source(df, merge_keys, meta.name)
+        else:
+            merged, key_obs = _observe_source_keys(df, merge_keys)
+            checks.append(lambda: _check_validation_metrics(
+                key_obs.get, df, merge_keys, meta.name
+            ))
+        if meta.current_version > 0:
+            target = read_snapshot(df.sparkSession, registry, meta)
+            merged = _merge_frames(target, merged, merge_keys)
     # expectations check the MERGED result, not the raw source: that is the
     # state the table would land in (Delta CHECK semantics), and it keeps a
     # schema-evolving merge source that legitimately omits a constrained
@@ -172,51 +168,56 @@ def write_snapshot(
     # Violation counting rides the write action (observe); drop-action
     # predicates filter inline (unconditional — filtering zero violating
     # rows is a no-op); fail/warn adjudicate post-write, pre-publish.
-    expect_obs = None
     if validate and expectations:
         merged, expect_obs = _apply_expectations_observed(
             merged, expectations, meta.name
         )
+        checks.append(lambda: _check_expectation_metrics(
+            expect_obs.get, expectations, meta.name
+        ))
 
-    expected = meta.current_version
-    new_version = expected + 1
-    # Stage into a unique dir, then CAS-publish: two racing writers would
-    # otherwise both target v{N+1} and the loser's parquet job would clobber
-    # the winner's committed files BEFORE the registry check could notice.
-    staging = os.path.join(
-        table_dir, f".staging-v{new_version:06d}-{os.getpid()}-{id(df):x}"
-    )
     cluster = [c for c in getattr(meta, "cluster_columns", []) if c in merged.columns]
     if cluster:
         # range partition + in-file sort: parquet min/max stats become
         # selective on the cluster key (row-group skipping at read time)
         merged = merged.repartitionByRange(*cluster).sortWithinPartitions(*cluster)
-    writer = merged.write.mode("overwrite")
+    return _publish(registry, meta, merged, checks, properties_update)
+
+
+def _publish(
+    registry: Registry, meta: FeatureTableMeta, df: DataFrame,
+    checks: list | tuple = (), properties_update: dict | None = None,
+) -> FeatureTableMeta:
+    """Stage ``df`` as the table's next version and CAS-publish it — the one
+    commit path of every write in this module.  Refreshes ``meta`` in place.
+
+    The staging dir carries a per-call unique token: two writers, even in
+    one process, never share one, so a loser's parquet job cannot clobber
+    the files the winner staged before the registry check notices.  Each of
+    ``checks`` adjudicates metrics observed during the staging write; one
+    that raises deletes the staging dir, so a rejected write never publishes.
+    """
+    table_dir = registry.table_dir(meta.name)
+    expected = meta.current_version
+    staging = os.path.join(
+        table_dir, f".staging-v{expected + 1:06d}-{uuid.uuid4().hex}"
+    )
+    out = df.write.mode("overwrite")
     if meta.partition_columns:
-        writer = writer.partitionBy(*meta.partition_columns)
-    writer.parquet(staging)
-
-    # adjudicate the fused validation/expectation metrics BEFORE publish:
-    # a rejected write deletes its staging dir and raises — no version is
-    # ever published, exactly like the old pre-write rejection
-    if validate_obs is not None or expect_obs is not None:
-        try:
-            if validate_obs is not None:
-                _check_validation_metrics(validate_obs.get, df, merge_keys, meta.name)
-            if expect_obs is not None:
-                _check_expectation_metrics(expect_obs.get, expectations, meta.name)
-        except Exception:
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-
+        out = out.partitionBy(*meta.partition_columns)
+    out.parquet(staging)
+    try:
+        for check in checks:
+            check()
+    except Exception:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     updated = registry.publish_version(
         meta.name,
         expected_version=expected,
         staging_dir=staging,
-        final_dir=_version_dir(table_dir, new_version),
-        schema_json=merged.schema.json(),
+        final_dir=_version_dir(table_dir, expected + 1),
+        schema_json=df.schema.json(),
         properties_update=properties_update,
     )
     meta.current_version = updated.current_version
@@ -224,18 +225,17 @@ def write_snapshot(
     return updated
 
 
+def _any_null(keys: list[str]) -> Column:
+    return reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
+
+
 def _validate_source(df: DataFrame, keys: list[str], table: str) -> None:
     """One aggregate pass: no null keys, no duplicate key tuples (the
     conditions under which a merge result would be nondeterministic)."""
-    from functools import reduce
-
-    null_cond = reduce(
-        lambda a, b: a | b, [F.col(k).isNull() for k in keys]
-    )
     bad = (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("__n"))
-        .where((F.col("__n") > 1) | null_cond)
+        .where((F.col("__n") > 1) | _any_null(keys))
         .limit(1)
         .collect()
     )
@@ -273,65 +273,55 @@ def _normalize_expectations(expectations: dict) -> dict[str, tuple[str, str]]:
     return out
 
 
-def _merge_frames_validated(
-    target: DataFrame, source: DataFrame, keys: list[str]
-):
-    """Anti-join + union upsert with the source-key validation metrics
-    fused into the plan (r14).
-
-    Semantics when the source is VALID (unique, non-null keys — the only
-    case that ever publishes, because :func:`_check_validation_metrics`
-    rejects the rest before the registry flip): identical to
-    :func:`_merge_frames` — matched target rows are replaced by their
-    source row in full, unmatched source rows are inserted, evolved
-    source-only columns appear with null for untouched target rows.
-
-    Plan shape vs the window form: the target is NEVER shuffled — matched
-    rows drop via a null-safe LEFT ANTI join against the source keys
-    (broadcast while the source slice is small; AQE falls back to a
-    shuffled anti for genuinely large sources), and only the source side
-    pays a key-partitioned window that carries the per-key source-row
-    count the validation metrics read.  The old form shuffled
-    target+source through one row_number window per merge — at 100 TB
-    that re-shuffles the whole snapshot to apply a slice.
-
-    Returns ``(merged_df, Observation)``; the caller must run an action on
-    ``merged_df`` and then adjudicate the observation.
+def _observe_source_keys(source: DataFrame, keys: list[str]):
+    """Source-key validation fused into the write action (r14): the max
+    source rows per key and the null-key row count ride an ``observe`` over
+    a key-partitioned window on the source, instead of a separate
+    groupBy+collect job.  Returns ``(source, Observation)``; the caller runs
+    an action and then adjudicates with :func:`_check_validation_metrics`.
     """
-    from functools import reduce
-
-    from pyspark.sql import Observation
-
-    w = Window.partitionBy(*keys)
-    null_key = reduce(
-        lambda a, b: a | b, [F.col(k).isNull() for k in keys]
-    )
-    s = source.withColumn("__src_n", F.count(F.lit(1)).over(w))
     obs = Observation()
-    s = s.observe(
+    counted = source.withColumn(
+        "__src_n", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    ).observe(
         obs,
         F.coalesce(F.max("__src_n"), F.lit(0)).alias("dup_max"),
         F.coalesce(
-            F.sum(F.when(null_key, 1).otherwise(0)), F.lit(0)
+            F.sum(F.when(_any_null(keys), 1).otherwise(0)), F.lit(0)
         ).alias("null_keys"),
     )
-    s = s.select(*source.columns)
+    return counted.select(*source.columns), obs
+
+
+def _merge_frames(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
+    """Upsert of ``source`` onto ``target`` by ``keys``, admitting
+    source-only columns (schema evolution): Delta's MERGE ... WHEN MATCHED
+    UPDATE SET * / WHEN NOT MATCHED INSERT * observable semantics — for a
+    matched key the SOURCE row wins in full (including nulls it carries);
+    target rows never matched keep their values with null in any evolved
+    column.  ``source`` must hold one row per key (validated or
+    deduplicated by the caller).
+
+    The target is never shuffled: matched rows drop via a null-safe LEFT
+    ANTI join against the source keys (broadcast while the source slice is
+    small; AQE falls back to a shuffled anti for genuinely large sources).
+    """
     # rename the join side's keys: target and source frequently share
     # lineage (an update slice derived from read_table of the same
     # snapshot), where bare attribute references are ambiguous
-    skeys = s.select(*[F.col(k).alias(f"__sk_{k}") for k in keys])
-    cond = None
-    for k in keys:
-        piece = F.col(k).eqNullSafe(F.col(f"__sk_{k}"))
-        cond = piece if cond is None else cond & piece
+    skeys = source.select(*[F.col(k).alias(f"__sk_{k}") for k in keys])
+    cond = reduce(
+        lambda a, b: a & b,
+        [F.col(k).eqNullSafe(F.col(f"__sk_{k}")) for k in keys],
+    )
     kept = target.join(skeys, on=cond, how="left_anti")
-    return kept.unionByName(s, allowMissingColumns=True), obs
+    return kept.unionByName(source, allowMissingColumns=True)
 
 
 def _check_validation_metrics(
     metrics: dict, source: DataFrame, keys: list[str], table: str
 ) -> None:
-    """Adjudicate :func:`_merge_frames_validated`'s observation after the
+    """Adjudicate :func:`_observe_source_keys`'s observation after the
     write action.  On violation, re-run the classic one-pass validator to
     produce the same detailed error message (failure path only — the
     happy path never pays a second job)."""
@@ -359,8 +349,6 @@ def _apply_expectations_observed(
 
     Unevaluable predicates reject at plan-build time with a
     per-expectation ValueError."""
-    from pyspark.sql import Observation
-
     norm = _normalize_expectations(expectations)
     aggs = []
     for name, (pred, _action) in norm.items():
@@ -423,27 +411,6 @@ def _check_expectation_metrics(
         )
 
 
-def _merge_frames(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
-    """Last-writer-wins upsert of ``source`` onto ``target`` by ``keys``,
-    admitting source-only columns (schema evolution).
-
-    Exactly Delta's MERGE ... WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED
-    INSERT * observable semantics: for a matched key the SOURCE row wins in
-    full (including nulls it carries); target rows never matched keep their
-    values with null in any evolved column.
-    """
-    prio = "__writer_priority"
-    t = target.withColumn(prio, F.lit(0))
-    s = source.withColumn(prio, F.lit(1))
-    unioned = t.unionByName(s, allowMissingColumns=True)
-    w = Window.partitionBy(*keys).orderBy(F.col(prio).desc())
-    return (
-        unioned.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop(prio, "__rn")
-    )
-
-
 def compact_snapshot(
     spark: SparkSession,
     registry: Registry,
@@ -451,7 +418,7 @@ def compact_snapshot(
     num_files: int | None = None,
 ) -> FeatureTableMeta:
     """Small-file compaction: rewrite the current snapshot into ``num_files``
-    parquet files (defaults to shuffle-partition count capped by row count).
+    parquet files (defaults to the shuffle-partition count, capped at 16).
 
     Merge writes inherit the merge plan's shuffle partitioning, so a busy
     feature table accumulates many small files — at scale that's scan
@@ -459,27 +426,10 @@ def compact_snapshot(
     analog: same rows, new version, fewer files; readers flip atomically
     with the registry pointer like any other write.
     """
-    current = read_snapshot(spark, registry, meta)
     if num_files is None:
         num_files = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")), 16))
-    compacted = current.coalesce(num_files)
-    expected = meta.current_version
-    new_version = expected + 1
-    table_dir = registry.table_dir(meta.name)
-    staging = os.path.join(table_dir, f".staging-v{new_version:06d}-compact-{os.getpid()}")
-    writer = compacted.write.mode("overwrite")
-    if meta.partition_columns:
-        writer = writer.partitionBy(*meta.partition_columns)
-    writer.parquet(staging)
-    updated = registry.publish_version(
-        meta.name,
-        expected_version=expected,
-        staging_dir=staging,
-        final_dir=_version_dir(table_dir, new_version),
-        schema_json=meta.schema_json,
-    )
-    meta.current_version = updated.current_version
-    return updated
+    current = read_snapshot(spark, registry, meta)
+    return _publish(registry, meta, current.coalesce(num_files))
 
 
 def merge_into_delta(
@@ -491,10 +441,11 @@ def merge_into_delta(
     writers serialize through the Delta log instead of this module's
     optimistic parquet-snapshot CAS.
 
-    Same observable semantics as :func:`_merge_frames`:
+    Same observable semantics as :func:`write_snapshot`'s merge:
     ``whenMatchedUpdateAll`` / ``whenNotMatchedInsertAll`` with
     ``schema.autoMerge`` on for evolved source columns; null-safe key
-    equality (``<=>``) so null keys match like the window dedup does.
+    equality (``<=>``) so null keys match like the snapshot merge's
+    anti join does.
 
     delta-spark is not installed in this harness, so the wiring is pinned by
     a fake-module contract test (tests/test_featurestore.py) and raises
@@ -537,8 +488,6 @@ def vacuum_snapshots(
     which is why retention should exceed the longest-running query.
     Leftover ``.staging-*`` dirs from crashed writers are swept too.
     """
-    import shutil
-
     keep_last = max(1, keep_last)
     table_dir = registry.table_dir(meta.name)
     removed: list[int] = []
@@ -577,30 +526,11 @@ def delete_keys(
         raise ValueError(f"keys_df is missing key column(s) {missing}")
     if meta.current_version == 0:
         raise ValueError(f"feature table {meta.name} has no data yet")
-    spark = keys_df.sparkSession
-    target = read_snapshot(spark, registry, meta)
+    target = read_snapshot(keys_df.sparkSession, registry, meta)
     remaining = target.join(
         keys_df.select(*merge_keys).distinct(), on=merge_keys, how="left_anti"
     )
-    expected = meta.current_version
-    new_version = expected + 1
-    table_dir = registry.table_dir(meta.name)
-    staging = os.path.join(
-        table_dir, f".staging-v{new_version:06d}-delete-{os.getpid()}"
-    )
-    writer = remaining.write.mode("overwrite")
-    if meta.partition_columns:
-        writer = writer.partitionBy(*meta.partition_columns)
-    writer.parquet(staging)
-    updated = registry.publish_version(
-        meta.name,
-        expected_version=expected,
-        staging_dir=staging,
-        final_dir=_version_dir(table_dir, new_version),
-        schema_json=meta.schema_json,
-    )
-    meta.current_version = updated.current_version
-    return updated
+    return _publish(registry, meta, remaining)
 
 
 def restore_version(
@@ -616,23 +546,4 @@ def restore_version(
     publish).  The restored version must still be on disk (i.e. not yet
     retired by ``vacuum_snapshots``)."""
     source = read_snapshot(spark, registry, meta, version=version)
-    expected = meta.current_version
-    new_version = expected + 1
-    table_dir = registry.table_dir(meta.name)
-    staging = os.path.join(
-        table_dir, f".staging-v{new_version:06d}-restore-{os.getpid()}"
-    )
-    writer = source.write.mode("overwrite")
-    if meta.partition_columns:
-        writer = writer.partitionBy(*meta.partition_columns)
-    writer.parquet(staging)
-    updated = registry.publish_version(
-        meta.name,
-        expected_version=expected,
-        staging_dir=staging,
-        final_dir=_version_dir(table_dir, new_version),
-        schema_json=source.schema.json(),
-    )
-    meta.current_version = updated.current_version
-    meta.schema_json = updated.schema_json
-    return updated
+    return _publish(registry, meta, source)

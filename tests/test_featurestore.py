@@ -387,6 +387,31 @@ def test_merge_rejects_duplicate_and_null_source_keys(spark, client):
     # escape hatch still works
     client.write_table("vtab", dup, mode="merge", validate=False)
     assert client.read_table("vtab").where(F.col("customer_id") == 1).count() == 1
+    nulldup = nullk.unionByName(nullk)
+    for _ in range(2):  # a null key matches itself on the next merge
+        client.write_table("vtab", nulldup, mode="merge", validate=False)
+        assert client.read_table("vtab").where(F.col("customer_id").isNull()).count() == 1
+
+    # a schema-only table: the first merge has no target to merge into
+    import os
+
+    client.create_feature_table("etab", keys="customer_id", schema=nullk.schema)
+    tdir = client.registry.table_dir("etab")
+    for src, match in ((dup, "arbitrary"), (nullk, "null key")):
+        with pytest.raises(ValueError, match=match):
+            client.write_table("etab", src, mode="merge")
+        assert client.get_feature_table("etab").current_version == 0
+        assert not [
+            d for d in (os.listdir(tdir) if os.path.isdir(tdir) else [])
+            if d.startswith(".staging-")
+        ]
+    client.write_table("etab", dup.unionByName(nulldup), mode="merge", validate=False)
+    assert sorted(
+        (r["customer_id"], r["n"]) for r in
+        client.read_table("etab").groupBy("customer_id").agg(F.count("*").alias("n")).collect()
+        if r["customer_id"] is not None
+    ) == [(1, 1)]
+    assert client.read_table("etab").where(F.col("customer_id").isNull()).count() == 1
 
 
 def test_read_table_time_travel(spark, client):
@@ -848,6 +873,41 @@ def test_concurrent_merge_writers_cas(spark, client):
     )
     rows = {r["customer_id"]: r["gender"] for r in client.read_table("race").collect()}
     assert rows[1] == "A" and rows[2] == "B"
+
+
+def test_racing_deletes_stage_apart(spark, client, monkeypatch):
+    """Two deletes from the same base version in one process: the loser
+    stages its rows between the winner's staging write and the winner's
+    publish.  Each writer stages into its own directory, so the winner
+    publishes its own result, not the loser's."""
+    from databricks_feature_store_flight_school_spark.featurestore import writer as W
+    from databricks_feature_store_flight_school_spark.featurestore.registry import (
+        ConcurrentWriteError,
+    )
+
+    client.create_feature_table(
+        "drace", keys="k", df=spark.createDataFrame([Row(k=i) for i in range(4)])
+    )
+    loser_meta = client.get_feature_table("drace")
+    real_publish = client.registry.publish_version
+    calls = []
+
+    def publish(name, expected_version, staging_dir, *args, **kwargs):
+        calls.append(staging_dir)
+        if len(calls) == 2:  # the loser, staged while the winner waits
+            raise ConcurrentWriteError("lost the race")
+        if len(calls) == 1:
+            with pytest.raises(ConcurrentWriteError):
+                W.delete_keys(
+                    client.registry, loser_meta, spark.createDataFrame([Row(k=2)])
+                )
+        return real_publish(name, expected_version, staging_dir, *args, **kwargs)
+
+    monkeypatch.setattr(client.registry, "publish_version", publish)
+    meta = client.delete_from_table("drace", spark.createDataFrame([Row(k=1)]))
+    assert sorted(r["k"] for r in client.read_table("drace").collect()) == [0, 2, 3]
+    assert meta.current_version == 2
+    assert len(calls) == 2 and calls[0] != calls[1]
 
 
 def test_merge_into_delta_contract(spark, monkeypatch):

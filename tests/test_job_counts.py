@@ -1,6 +1,6 @@
 """Deterministic Spark job-count guards for the feature-store small-commit
-path: building a read, one materialized-view refresh and one incremental
-online publish.  Job counts do not move with host speed, so a rise here is
+path: building a read, a merge, a delete, one materialized-view refresh
+and one incremental online publish.  Job counts do not move with host speed, so a rise here is
 a structural regression (an extra scan, a schema probe, a second evaluation
 of a change window) that wall-clock timing would hide in noise."""
 
@@ -37,8 +37,9 @@ def count_jobs(spark, fn):
 def cycle(spark, tmp_path_factory):
     """A small table with a count/sum/max view and a Derby mirror, both
     bootstrapped, then one merge (update, group move, insert, an update of
-    a column the view does not read) and one delete.  Shared by the tests
-    below: each advances a different consumer (the view, the mirror)."""
+    a column the view does not read) and one delete, whose job counts ride
+    along.  Shared by the tests below: each advances a different consumer
+    (the view, the mirror)."""
     tmp_path = tmp_path_factory.mktemp("job_counts")
     fs = FeatureStoreClient(spark, str(tmp_path / "wh"))
     fs.create_feature_table(
@@ -57,19 +58,21 @@ def cycle(spark, tmp_path_factory):
     fs.refresh_materialized_view("by_plan")
     spec = EmbeddedDerbySpec(str(tmp_path / "online_db"))
     fs.publish_table("svc", online_store=spec, mode="incremental")
-    fs.write_table("svc", spark.createDataFrame([
+    merge = spark.createDataFrame([
         Row(customerID="0000001-CUST", plan="p2", charges=100.0, tenure=1),
         Row(customerID="0000003-CUST", plan="p0", charges=3.0, tenure=77),
         Row(customerID="0000099-CUST", plan="p0", charges=1.0, tenure=1),
-    ]))
-    fs.delete_from_table(
-        "svc", spark.createDataFrame([Row(customerID="0000002-CUST")])
-    )
-    return fs, spec
+    ])
+    gone = spark.createDataFrame([Row(customerID="0000002-CUST")])
+    writes = {
+        "merge": count_jobs(spark, lambda: fs.write_table("svc", merge))[0],
+        "delete": count_jobs(spark, lambda: fs.delete_from_table("svc", gone))[0],
+    }
+    return fs, spec, writes
 
 
 def test_read_table_build_launches_no_job(spark, cycle):
-    fs, _spec = cycle
+    fs, _spec, _writes = cycle
     jobs, df = count_jobs(spark, lambda: fs.read_table("svc"))
     assert jobs == 0
     assert df.columns == ["customerID", "plan", "charges", "tenure"]
@@ -78,7 +81,7 @@ def test_read_table_build_launches_no_job(spark, cycle):
 
 
 def test_refresh_materialized_view_job_budget(spark, cycle):
-    fs, _spec = cycle
+    fs, _spec, _writes = cycle
     jobs, _meta = count_jobs(
         spark, lambda: fs.refresh_materialized_view("by_plan")
     )
@@ -95,7 +98,7 @@ def test_refresh_materialized_view_job_budget(spark, cycle):
 
 
 def test_incremental_publish_job_budget(spark, cycle):
-    fs, spec = cycle
+    fs, spec, _writes = cycle
     jobs, _ = count_jobs(
         spark,
         lambda: fs.publish_table("svc", online_store=spec, mode="incremental"),
@@ -107,3 +110,20 @@ def test_incremental_publish_job_budget(spark, cycle):
         .option("dbtable", "svc").options(**props).load()
     )
     assert sorted(mirror.collect()) == sorted(fs.read_table("svc").collect())
+
+
+def test_writer_job_budget(spark, cycle, tmp_path):
+    """A validated merge fuses key validation into its staging write; a
+    delete is one anti-join write; a first validated merge into a
+    schema-only table pays one small key aggregate before its write."""
+    fs, _spec, writes = cycle
+    assert writes["merge"] <= 5
+    assert writes["delete"] <= 4
+    fs2 = FeatureStoreClient(spark, str(tmp_path / "wh"))
+    src = spark.createDataFrame(
+        [Row(k=i, v=float(i)) for i in range(40)]
+    )
+    fs2.create_feature_table("fresh", keys="k", schema=src.schema)
+    jobs, _meta = count_jobs(spark, lambda: fs2.write_table("fresh", src))
+    assert jobs <= 3
+    assert fs2.read_table("fresh").count() == 40
