@@ -22,6 +22,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..functions import quote
 from . import scoring, writer
 from .decorators import FeatureComputation, feature_table as _feature_table_deco
 from .lookups import FeatureLookup, TrainingSet
@@ -148,7 +149,9 @@ class FeatureStoreClient:
 
         Output: key columns, ``_change_type``, then ``old_<c>`` / ``new_<c>``
         for every value column of the NEW schema (schema evolution shows as
-        ``old_<c>`` = NULL for columns the older snapshot lacked).  Scale:
+        ``old_<c>`` = NULL, typed like ``new_<c>``, for columns the older
+        snapshot lacked).  The plan is built from SQL strings with quoted
+        identifiers: one call per operator, any column name.  Scale:
         one keys-partitioned shuffle join and narrow compares — never a
         snapshot collect; downstream incremental consumers (online-store
         sync, materialized views) read |changed| rows, not |table|.
@@ -178,43 +181,34 @@ class FeatureStoreClient:
             c for c in new.columns
             if c not in keys and (columns is None or c in columns)
         ]
-        o = old.select(
-            *[F.col(k).alias(f"__ok_{k}") for k in keys],
-            *[
-                (F.col(c) if c in old.columns else F.lit(None)).alias(f"old_{c}")
-                for c in val_cols
-            ],
+        o = old.selectExpr(
+            *[f"{quote(k)} AS {quote(f'__ok_{k}')}" for k in keys],
+            *[f"{quote(c)} AS {quote(f'old_{c}')}" for c in val_cols if c in old.columns],
         )
-        n = new.select(
-            *keys, *[F.col(c).alias(f"new_{c}") for c in val_cols]
+        missing = [c for c in val_cols if c not in old.columns]
+        if missing:  # typed like the newer column, not as a void NULL
+            o = o.withColumns({
+                f"old_{c}": F.lit(None).cast(new.schema[c].dataType) for c in missing
+            })
+        n = new.selectExpr(
+            *[quote(k) for k in keys],
+            *[f"{quote(c)} AS {quote(f'new_{c}')}" for c in val_cols],
         )
-        cond = None
-        for k in keys:
-            piece = F.col(k).eqNullSafe(F.col(f"__ok_{k}"))
-            cond = piece if cond is None else cond & piece
-        joined = n.join(o, on=cond, how="full_outer")
-        in_old = F.col(f"__ok_{keys[0]}").isNotNull()
-        in_new = F.col(keys[0]).isNotNull()
-        differs = F.lit(False)
-        for c in val_cols:
-            differs = differs | ~F.col(f"new_{c}").eqNullSafe(F.col(f"old_{c}"))
-        change = (
-            F.when(~in_old, F.lit("insert"))
-            .when(~in_new, F.lit("delete"))
-            .when(differs, F.lit("update"))
-        )
-        out_keys = [
-            F.coalesce(F.col(k), F.col(f"__ok_{k}")).alias(k) for k in keys
-        ]
+        on = " AND ".join(f"{quote(k)} <=> {quote(f'__ok_{k}')}" for k in keys)
+        differs = " OR ".join(
+            f"NOT ({quote(f'new_{c}')} <=> {quote(f'old_{c}')})" for c in val_cols
+        ) or "false"
         return (
-            joined.withColumn("_change_type", change)
-            .where(F.col("_change_type").isNotNull())
-            .select(
-                *out_keys,
-                "_change_type",
-                *[F.col(f"old_{c}") for c in val_cols],
-                *[F.col(f"new_{c}") for c in val_cols],
+            n.join(o, on=F.expr(on), how="full_outer")
+            .selectExpr(
+                *[f"coalesce({quote(k)}, {quote(f'__ok_{k}')}) AS {quote(k)}" for k in keys],
+                f"CASE WHEN {quote(f'__ok_{keys[0]}')} IS NULL THEN 'insert' "
+                f"WHEN {quote(keys[0])} IS NULL THEN 'delete' "
+                f"WHEN {differs} THEN 'update' END AS _change_type",
+                *[quote(f"old_{c}") for c in val_cols],
+                *[quote(f"new_{c}") for c in val_cols],
             )
+            .where("_change_type IS NOT NULL")
         )
 
     def consume_changes(self, name: str, consumer_id: str):
@@ -295,7 +289,7 @@ class FeatureStoreClient:
         are not self-maintainable under deletes (Gupta & Mumick): new
         values fold in for free, while a departure that ties the extremum
         routes only its OWN group through a left-semi-pruned recompute
-        against the source (``operators.ivm.apply_minmax``) — with the
+        against the source (``operators.ivm.fold_window``) — with the
         source clustered on the group key that reads |affected| partitions,
         not the table.
 
@@ -411,9 +405,15 @@ class FeatureStoreClient:
         changes none of them adds zero to every moment and never moves an
         extremum, so it can be left out of the window.
 
-        Exactly-once by construction: the refresh folds the change window
-        (applied, current] into the moment state with one group-key
-        full-outer join, and the new state snapshot publishes atomically
+        The refresh folds the change window (applied, current] into the
+        state with ONE grouped aggregate over prior state ∪ the window's
+        signed images (``operators.ivm.fold_window``): moments, row counts
+        and MIN/MAX extrema all come out of that ``groupBy``, and no join
+        against the state remains.  Only groups whose extremum departed
+        are recomputed from the current source, through a broadcast
+        left-semi join on the affected group keys.
+
+        Exactly-once by construction: the new state snapshot publishes atomically
         WITH ``mv_applied_version=current`` in the same registry CAS — a
         crash before the publish re-applies the identical window onto the
         OLD state (idempotent), and after it the next refresh sees the
@@ -424,10 +424,8 @@ class FeatureStoreClient:
         tracks BOTH tables' applied versions; they flip atomically with the
         state in the same publish, so the two feeds can never come apart."""
         from ..operators.ivm import (
-            _minmax_cols, _moment_cols, apply_deltas, apply_minmax,
-            apply_minmax_signed, compute_stats, join_deltas,
-            join_groups_null_safe, signed_changes, signed_stats_deltas,
-            stats_deltas,
+            _minmax_cols, compute_stats, fold_window, join_deltas, net_signed,
+            signed_changes,
         )
 
         meta = self.registry.get(name)
@@ -449,139 +447,85 @@ class FeatureStoreClient:
         # the only columns the view reads: its windows diff just these
         read_cols = gcols + src_cols + sorted({s for _fn, s in mm_cols.values()})
         dim = mv.get("dim")
+        properties = {"mv_applied_version": current}
         if dim is None:
             if applied >= current:
                 return meta
+            base_cur = self.read_table(mv["source"], version=current)
             if applied == 0:
-                state = compute_stats(
-                    self.read_table(mv["source"], version=current), gcols,
-                    src_cols, minmax_cols=mm_cols,
-                )
+                state = compute_stats(base_cur, gcols, src_cols, minmax_cols=mm_cols)
             else:
-                changes = self._snapshot_diff(
-                    src_meta, applied, current, columns=read_cols
-                )
-                prev = self.read_table(name)
-                state = apply_deltas(
-                    prev,
-                    stats_deltas(changes, gcols, src_cols),
-                    gcols,
-                    _moment_cols(src_cols),
-                )
-                if mm_cols:
-                    # extrema maintain separately (apply_minmax's bounded
-                    # affected-group recompute against the CURRENT source),
-                    # then rejoin the moment state on the group key.  Inner
-                    # join is exact: both algebras independently reproduce
-                    # the from-scratch group set (apply_deltas retires
-                    # count-0 groups; apply_minmax routes emptied groups
-                    # through the recompute branch) — property-pinned.
-                    base_cur = self.read_table(mv["source"], version=current)
-                    for kind in ("min", "max"):
-                        sub = {
-                            m: src for m, (fn, src) in mm_cols.items()
-                            if fn == kind
-                        }
-                        if not sub:
-                            continue
-                        part = apply_minmax(
-                            prev.select(*gcols, *sub.keys()),
-                            changes, base_cur, gcols, sub, agg=kind,
-                        )
-                        state = join_groups_null_safe(state, part, gcols, "inner")
-            updated = writer.write_snapshot(
-                self.registry, meta, state, mode="overwrite", validate=False,
-                properties_update={"mv_applied_version": current},
-            )
-            if vacuum_keep is not None:
-                writer.vacuum_snapshots(self.registry, updated, keep_last=vacuum_keep)
-            return updated
-
-        # join view: advance (applied, applied_dim] -> (current, dim_current]
-        dim_meta = self.registry.get(dim)
-        dim_applied = int(meta.properties.get("mv_applied_dim_version", 0))
-        dim_current = dim_meta.current_version
-        if dim_current == 0:
-            raise ValueError(f"dim table {dim!r} has no data yet")
-        if applied >= current and dim_applied >= dim_current:
-            return meta
-        join_keys = list(mv["join_on"])
-        if applied == 0:
-            base = self.read_table(mv["source"], version=current).join(
-                self.read_table(dim, version=dim_current), on=join_keys
-            )
-            state = compute_stats(base, gcols, src_cols, minmax_cols=mm_cols)
-        else:
-            # both join terms carry the same narrowed columns: each side's
-            # keys plus the view's columns it owns (join_on on the fact side)
-            read_cols = read_cols + join_keys
-
-            def narrow(df: DataFrame, keys: list[str]) -> DataFrame:
-                return df.select(
-                    *[c for c in df.columns if c in keys or c in read_cols]
-                )
-
-            d_l = (
-                signed_changes(
-                    self._snapshot_diff(
-                        src_meta, applied, current, columns=read_cols
-                    ),
+                signed = signed_changes(
+                    self._snapshot_diff(src_meta, applied, current, columns=read_cols),
                     src_meta.keys,
                 )
-                if current > applied else None
-            )
-            d_r = (
-                signed_changes(
-                    self._snapshot_diff(
-                        dim_meta, dim_applied, dim_current, columns=read_cols
-                    ),
-                    dim_meta.keys,
+                state = fold_window(
+                    self.read_table(name), signed, gcols, src_cols, mm_cols,
+                    base_cur,
                 )
-                if dim_current > dim_applied else None
+        else:
+            # join view: advance (applied, applied_dim] -> (current, dim_current]
+            dim_meta = self.registry.get(dim)
+            dim_applied = int(meta.properties.get("mv_applied_dim_version", 0))
+            dim_current = dim_meta.current_version
+            if dim_current == 0:
+                raise ValueError(f"dim table {dim!r} has no data yet")
+            if applied >= current and dim_applied >= dim_current:
+                return meta
+            properties["mv_applied_dim_version"] = dim_current
+            join_keys = list(mv["join_on"])
+            base_cur = self.read_table(mv["source"], version=current).join(
+                self.read_table(dim, version=dim_current), on=join_keys
             )
-            sd = join_deltas(
-                d_l,
-                narrow(self.read_table(dim, version=dim_current), dim_meta.keys),
-                narrow(
-                    self.read_table(mv["source"], version=applied), src_meta.keys
-                ),
-                d_r,
-                on=join_keys,
-            )
-            prev = self.read_table(name)
-            state = apply_deltas(
-                prev,
-                signed_stats_deltas(sd, gcols, src_cols),
-                gcols,
-                _moment_cols(src_cols),
-            )
-            if mm_cols:
-                # extrema over the JOIN view: the signed delta carries the
-                # joined group/measure columns directly, and the bounded
-                # recompute runs against the CURRENT join.  Inner-join
-                # recombination with the moment state — same exactness
-                # argument as the plain-view path (property-pinned).
-                base_cur = self.read_table(mv["source"], version=current).join(
-                    self.read_table(dim, version=dim_current), on=join_keys
-                )
-                for kind in ("min", "max"):
-                    sub = {
-                        m: src for m, (fn, src) in mm_cols.items()
-                        if fn == kind
-                    }
-                    if not sub:
-                        continue
-                    part = apply_minmax_signed(
-                        prev.select(*gcols, *sub.keys()),
-                        sd, base_cur, gcols, sub, agg=kind,
+            if applied == 0:
+                state = compute_stats(base_cur, gcols, src_cols, minmax_cols=mm_cols)
+            else:
+                # both join terms carry the same narrowed columns: each side's
+                # keys plus the view's columns it owns (join_on on the fact side)
+                join_cols = read_cols + join_keys
+
+                def narrow(df: DataFrame, keys: list[str]) -> DataFrame:
+                    return df.selectExpr(*[
+                        quote(c) for c in df.columns if c in keys or c in join_cols
+                    ])
+
+                d_l = (
+                    signed_changes(
+                        self._snapshot_diff(
+                            src_meta, applied, current, columns=join_cols
+                        ),
+                        src_meta.keys,
                     )
-                    state = join_groups_null_safe(state, part, gcols, "inner")
+                    if current > applied else None
+                )
+                d_r = (
+                    signed_changes(
+                        self._snapshot_diff(
+                            dim_meta, dim_applied, dim_current, columns=join_cols
+                        ),
+                        dim_meta.keys,
+                    )
+                    if dim_current > dim_applied else None
+                )
+                signed = join_deltas(
+                    d_l,
+                    narrow(self.read_table(dim, version=dim_current), dim_meta.keys),
+                    narrow(
+                        self.read_table(mv["source"], version=applied),
+                        src_meta.keys,
+                    ),
+                    d_r,
+                    on=join_keys,
+                )
+                if mm_cols:  # extrema need the phantom pairs netted away
+                    signed = net_signed(signed, read_cols)
+                state = fold_window(
+                    self.read_table(name), signed, gcols, src_cols, mm_cols,
+                    base_cur,
+                )
         updated = writer.write_snapshot(
             self.registry, meta, state, mode="overwrite", validate=False,
-            properties_update={
-                "mv_applied_version": current,
-                "mv_applied_dim_version": dim_current,
-            },
+            properties_update=properties,
         )
         if vacuum_keep is not None:
             writer.vacuum_snapshots(self.registry, updated, keep_last=vacuum_keep)
@@ -794,14 +738,12 @@ class FeatureStoreClient:
         ``_change_type``, because Derby stores a string column as a CLOB,
         which it cannot compare.  A stage left by a failed sync is replaced
         by the next one."""
-        from pyspark.sql import functions as F
-
         vals = [c[len("new_"):] for c in changes.columns if c.startswith("new_")]
         stage = f"{table}__sync_stage"
-        staged = changes.select(
-            *keys,
-            (F.col("_change_type") == "delete").cast("int").alias("__deleted"),
-            *[F.col(f"new_{c}").alias(c) for c in vals],
+        staged = changes.selectExpr(
+            *[quote(k) for k in keys],
+            "CAST(_change_type = 'delete' AS INT) AS __deleted",
+            *[f"{quote(f'new_{c}')} AS {quote(c)}" for c in vals],
         )
         self._jdbc_write(staged, jdbc_url, stage, "overwrite", properties, keys)
         # Spark's JDBC writer creates columns with QUOTED (case-exact)

@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions 
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
+from ..functions import quote
 from .registry import FeatureTableMeta, Registry, version_schema
 
 
@@ -226,14 +227,14 @@ def _publish(
 
 
 def _any_null(keys: list[str]) -> Column:
-    return reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
+    return reduce(lambda a, b: a | b, [F.col(quote(k)).isNull() for k in keys])
 
 
 def _validate_source(df: DataFrame, keys: list[str], table: str) -> None:
     """One aggregate pass: no null keys, no duplicate key tuples (the
     conditions under which a merge result would be nondeterministic)."""
     bad = (
-        df.groupBy(*keys)
+        df.groupBy(*[quote(k) for k in keys])
         .agg(F.count(F.lit(1)).alias("__n"))
         .where((F.col("__n") > 1) | _any_null(keys))
         .limit(1)
@@ -281,8 +282,9 @@ def _observe_source_keys(source: DataFrame, keys: list[str]):
     an action and then adjudicates with :func:`_check_validation_metrics`.
     """
     obs = Observation()
+    per_key = Window.partitionBy(*[quote(k) for k in keys])
     counted = source.withColumn(
-        "__src_n", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+        "__src_n", F.count(F.lit(1)).over(per_key)
     ).observe(
         obs,
         F.coalesce(F.max("__src_n"), F.lit(0)).alias("dup_max"),
@@ -290,7 +292,7 @@ def _observe_source_keys(source: DataFrame, keys: list[str]):
             F.sum(F.when(_any_null(keys), 1).otherwise(0)), F.lit(0)
         ).alias("null_keys"),
     )
-    return counted.select(*source.columns), obs
+    return counted.select(*[quote(c) for c in source.columns]), obs
 
 
 def _merge_frames(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
@@ -309,10 +311,10 @@ def _merge_frames(target: DataFrame, source: DataFrame, keys: list[str]) -> Data
     # rename the join side's keys: target and source frequently share
     # lineage (an update slice derived from read_table of the same
     # snapshot), where bare attribute references are ambiguous
-    skeys = source.select(*[F.col(k).alias(f"__sk_{k}") for k in keys])
+    skeys = source.select(*[F.col(quote(k)).alias(f"__sk_{k}") for k in keys])
     cond = reduce(
         lambda a, b: a & b,
-        [F.col(k).eqNullSafe(F.col(f"__sk_{k}")) for k in keys],
+        [F.col(quote(k)).eqNullSafe(F.col(quote(f"__sk_{k}"))) for k in keys],
     )
     kept = target.join(skeys, on=cond, how="left_anti")
     return kept.unionByName(source, allowMissingColumns=True)
@@ -528,7 +530,8 @@ def delete_keys(
         raise ValueError(f"feature table {meta.name} has no data yet")
     target = read_snapshot(keys_df.sparkSession, registry, meta)
     remaining = target.join(
-        keys_df.select(*merge_keys).distinct(), on=merge_keys, how="left_anti"
+        keys_df.select(*[quote(k) for k in merge_keys]).distinct(),
+        on=merge_keys, how="left_anti",
     )
     return _publish(registry, meta, remaining)
 

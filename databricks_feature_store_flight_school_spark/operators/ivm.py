@@ -18,8 +18,18 @@ Views: Problems, Techniques, and Applications", IEEE Data Eng. Bulletin
 
 An update that moves a row between groups therefore adjusts BOTH groups; a
 group whose maintained count reaches zero is dropped (it no longer exists
-in the recomputed-from-scratch view).  Applying the deltas is one full-outer
-join on the group key — |groups-touched| rows, never the fact table.
+in the recomputed-from-scratch view).  For additive state the maintained
+aggregate and the change window combine in ONE grouped sum:
+:func:`fold_window` unions the prior state rows with the window's signed
+images and runs a single ``groupBy`` on the group key — |groups| +
+|changes| rows, never the fact table, and no join against the state.
+MIN/MAX ride the same aggregate; only groups that lose their extremum are
+recomputed.  :func:`apply_deltas` (one full-outer join) remains for callers
+that hold a precomputed delta frame.
+
+Plans built per refresh are SQL strings (``selectExpr`` / ``F.expr``) with
+:func:`quote`-d identifiers: one plan call per operator instead of one
+py4j round trip per column expression.
 
 Input contract: ``changes`` is a change-feed frame in the engine's
 ``table_changes`` schema — primary keys, ``_change_type`` in
@@ -31,7 +41,9 @@ inserts).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from ..functions import quote
 
 #: maintained count column — kept in the aggregate so deletes can retire
 #: groups exactly; name chosen to avoid colliding with user measures
@@ -246,74 +258,6 @@ def apply_minmax(
         *[F.col(f"old_{g}").alias(g) for g in gcols],
         *[F.col(f"old_{src}").alias(f"__old_{out}") for out, src in measures.items()],
     )
-    return _apply_minmax_core(
-        maintained, new_ext, old_img, base_current, gcols, measures, agg
-    )
-
-
-def apply_minmax_signed(
-    maintained: DataFrame,
-    signed: DataFrame,
-    base_current: DataFrame,
-    group_col: str | list[str],
-    measures: dict[str, str],
-    agg: str = "min",
-) -> DataFrame:
-    """MIN/MAX maintenance from a SIGNED relation (the :func:`apply_minmax`
-    analog for :func:`join_deltas` output, so extrema over equi-JOIN views
-    maintain incrementally too): ``+1`` rows fold in with least/greatest,
-    ``-1`` rows whose value ties the maintained extremum — or whose group's
-    extremum is NULL — mark the group affected and route it through the
-    bounded recompute against ``base_current`` (the CURRENT join).  Same
-    exactness and NULL contract as :func:`apply_minmax`; property-pinned
-    against a from-scratch recompute of the joined view.
-
-    The signed multiset is NETTED per (group, measure values) first — a
-    correctness requirement, not an optimisation: :func:`join_deltas`'
-    double-counting-free expansion emits cancelling phantom pairs (a
-    fact+dim double update yields ``+(old_fact, new_dim)`` AND
-    ``-(old_fact, new_dim)`` — a row the view never contained).  SUM/COUNT
-    cancel them in the group sums, but an un-netted phantom ARRIVAL on a
-    brand-new group would fold a never-existed value into the extremum
-    while its phantom departure finds no maintained row to trigger the
-    recompute.  After netting, net>0 values fold in, net<0 values run the
-    tie test, net=0 values left the multiset support unchanged and are
-    correctly ignored."""
-    gcols = _cols(group_col)
-    extf = F.min if agg == "min" else F.max
-    srcs = sorted({src for src in measures.values()})
-    net = signed.groupBy(*gcols, *srcs).agg(F.sum(SIGN_COL).alias("__net"))
-    new_ext = (
-        net.where(F.col("__net") > 0)
-        .select(
-            *gcols,
-            *[F.col(src).alias(out) for out, src in measures.items()],
-        )
-        .groupBy(*gcols)
-        .agg(*[extf(out).alias(out) for out in measures])
-    )
-    old_img = net.where(F.col("__net") < 0).select(
-        *gcols,
-        *[F.col(src).alias(f"__old_{out}") for out, src in measures.items()],
-    )
-    return _apply_minmax_core(
-        maintained, new_ext, old_img, base_current, gcols, measures, agg
-    )
-
-
-def _apply_minmax_core(
-    maintained: DataFrame,
-    new_ext: DataFrame,
-    old_img: DataFrame,
-    base_current: DataFrame,
-    gcols: list[str],
-    measures: dict[str, str],
-    agg: str,
-) -> DataFrame:
-    """Shared tail of the MIN/MAX maintenance rule: affected-group
-    detection (tie-or-NULL against the maintained extrema), left-semi
-    pruned recompute, and the fold of fresh extrema into untouched
-    groups."""
     cmp = F.least if agg == "min" else F.greatest
     hit = None
     for out in measures:
@@ -369,28 +313,25 @@ def signed_changes(changes: DataFrame, key_cols: str | list[str]) -> DataFrame:
 
     Single-pass (r14, guide §2.3): both images explode from ONE scan of
     ``changes`` — the union form executed the underlying snapshot diff
-    join once per side."""
+    join once per side.  The projection is one SQL string with quoted
+    identifiers, so building it costs one plan call, not one per column."""
     keys = _cols(key_cols)
     val_cols = sorted(
         {c[len("old_"):] for c in changes.columns if c.startswith("old_")}
     )
-    old_img = F.struct(
-        *keys,
-        *[F.col(f"old_{c}").alias(c) for c in val_cols],
-        F.lit(-1).alias(SIGN_COL),
-    )
-    new_img = F.struct(
-        *keys,
-        *[F.col(f"new_{c}").alias(c) for c in val_cols],
-        F.lit(1).alias(SIGN_COL),
-    )
-    ct = F.col("_change_type")
-    imgs = (
-        F.when(ct == "update", F.array(old_img, new_img))
-        .when(ct == "delete", F.array(old_img))
-        .when(ct == "insert", F.array(new_img))
-    )
-    return changes.select(F.explode(imgs).alias("__img")).select("__img.*")
+
+    def img(side: str, sign: int) -> str:
+        fields = [quote(k) for k in keys] + [
+            f"{quote(f'{side}_{c}')} AS {quote(c)}" for c in val_cols
+        ]
+        return f"struct({', '.join(fields)}, {sign} AS {SIGN_COL})"
+
+    old, new = img("old", -1), img("new", 1)
+    return changes.selectExpr(
+        f"explode(CASE _change_type WHEN 'update' THEN array({old}, {new}) "
+        f"WHEN 'delete' THEN array({old}) WHEN 'insert' THEN array({new}) "
+        "END) AS __img"
+    ).select("__img.*")
 
 
 def join_deltas(
@@ -449,31 +390,6 @@ def signed_agg_deltas(
     )
 
 
-def signed_stats_deltas(
-    signed: DataFrame, group_cols: str | list[str], src_cols: list[str]
-) -> DataFrame:
-    """Moment adjustments (sum, sum of squares, non-null count per measure,
-    plus row count) from a signed relation — :func:`stats_deltas` for
-    :func:`join_deltas` output, so AVG/VAR/STDDEV views over JOINS maintain
-    at the same O(|changes|) cost.  Output feeds :func:`apply_deltas` with
-    ``measure_cols=_moment_cols(src_cols)``."""
-    gcols = _cols(group_cols)
-    aggs = []
-    for c in src_cols:
-        v = F.col(c).cast("double")
-        sign = F.col(SIGN_COL)
-        aggs += [
-            F.sum(sign * F.coalesce(v, F.lit(0.0))).alias(f"__s_{c}_delta"),
-            F.sum(sign * F.coalesce(v * v, F.lit(0.0))).alias(f"__q_{c}_delta"),
-            F.sum(F.when(v.isNotNull(), sign).otherwise(F.lit(0))).alias(
-                f"__c_{c}_delta"
-            ),
-        ]
-    return signed.groupBy(*gcols).agg(
-        *aggs, F.sum(SIGN_COL).alias(f"{COUNT_COL}_delta")
-    )
-
-
 def _moment_cols(src_cols: list[str]) -> list[str]:
     """State columns maintained per source measure column: sum, sum of
     squares, and non-null count (the moments AVG/VAR/STDDEV derive from)."""
@@ -486,7 +402,7 @@ def _moment_cols(src_cols: list[str]) -> list[str]:
 def _minmax_cols(aggs: dict[str, tuple[str, str]]) -> dict[str, tuple[str, str]]:
     """Extremum state columns for the MIN/MAX aggregates in an ``aggs``
     spec: ``__mn_<src>`` / ``__mx_<src>`` -> (fn, src).  Shared naming
-    between :func:`compute_stats` bootstrap, :func:`apply_minmax`
+    between :func:`compute_stats` bootstrap, :func:`fold_window`
     maintenance, and :func:`derive_stats` read-out."""
     out: dict[str, tuple[str, str]] = {}
     for _o, (fn, src) in aggs.items():
@@ -511,66 +427,158 @@ def compute_stats(
 
     ``minmax_cols`` (state column -> (``min``|``max``, source column))
     optionally rides MIN/MAX extrema in the SAME single-scan groupBy — the
-    bootstrap twin of :func:`apply_minmax`'s maintained columns, kept in
+    bootstrap twin of :func:`fold_window`'s maintained columns, kept in
     the source column's own type (extrema, unlike moments, are not cast)."""
     aggs = []
     for c in src_cols:
-        v = F.col(c).cast("double")
+        v = f"CAST({quote(c)} AS DOUBLE)"
         aggs += [
-            F.sum(F.coalesce(v, F.lit(0.0))).alias(f"__s_{c}"),
-            F.sum(F.coalesce(v * v, F.lit(0.0))).alias(f"__q_{c}"),
-            F.count(v).alias(f"__c_{c}"),
+            f"sum(coalesce({v}, 0D)) AS {quote(f'__s_{c}')}",
+            f"sum(coalesce({v} * {v}, 0D)) AS {quote(f'__q_{c}')}",
+            f"count({v}) AS {quote(f'__c_{c}')}",
         ]
     for out, (fn, src) in (minmax_cols or {}).items():
-        aggs.append((F.min(src) if fn == "min" else F.max(src)).alias(out))
-    return facts.groupBy(*_cols(group_cols)).agg(
-        *aggs, F.count(F.lit(1)).alias(COUNT_COL)
+        aggs.append(f"{fn}({quote(src)}) AS {quote(out)}")
+    aggs.append(f"count(1) AS {COUNT_COL}")
+    return facts.groupBy(*[quote(g) for g in _cols(group_cols)]).agg(
+        *[F.expr(a) for a in aggs]
     )
 
 
-def stats_deltas(
-    changes: DataFrame, group_cols: str | list[str], src_cols: list[str]
-) -> DataFrame:
-    """Per-group moment adjustments from a change-feed frame — the
-    :func:`agg_deltas` analog over (sum, sum-of-squares, non-null count)
-    per measure column.  Feed the result straight into :func:`apply_deltas`
-    with ``measure_cols=_moment_cols(src_cols)``.
+def net_signed(signed: DataFrame, cols: list[str]) -> DataFrame:
+    """Net a signed relation per distinct ``cols`` tuple: one row per tuple
+    whose ``_sign`` sums to non-zero, carrying that sum as its weight.
 
-    Single-pass (r14, guide §2.3): old/new moment images explode from ONE
-    scan of ``changes`` instead of a two-select union re-executing the
-    snapshot-diff join per side."""
-    gcols = _cols(group_cols)
-
-    def _img(img: str, sign: int) -> Column:
-        cols = []
-        for c in src_cols:
-            v = F.col(f"{img}_{c}").cast("double")
-            cols += [
-                (F.lit(sign) * F.coalesce(v, F.lit(0.0))).alias(f"__s_{c}"),
-                (F.lit(sign) * F.coalesce(v * v, F.lit(0.0))).alias(f"__q_{c}"),
-                F.when(v.isNotNull(), F.lit(sign)).otherwise(F.lit(0)).alias(f"__c_{c}"),
-            ]
-        return F.struct(
-            *[F.col(f"{img}_{g}").alias(g) for g in gcols],
-            *cols,
-            F.lit(sign).alias(COUNT_COL),
-        )
-
-    ct = F.col("_change_type")
-    imgs = (
-        F.when(ct == "update", F.array(_img("old", -1), _img("new", 1)))
-        .when(ct == "delete", F.array(_img("old", -1)))
-        .when(ct == "insert", F.array(_img("new", 1)))
-    )
-    mcols = _moment_cols(src_cols)
+    MIN/MAX maintenance over :func:`join_deltas` output needs this for
+    correctness, not speed.  The double-counting-free expansion emits
+    cancelling phantom pairs: a fact+dim double update yields
+    ``+(old_fact, new_dim)`` AND ``-(old_fact, new_dim)``, a row the view
+    never contained.  Moment sums cancel them, but an un-netted phantom
+    ARRIVAL on a brand-new group would fold a never-existed value into the
+    extremum, while its phantom departure finds no maintained extremum to
+    tie.  After netting, positive weights arrive, negative weights depart,
+    and a zero-weight tuple left the multiset unchanged and is dropped."""
+    names = [quote(c) for c in dict.fromkeys(cols)]
     return (
-        changes.select(F.explode(imgs).alias("__img"))
-        .select("__img.*")
+        signed.groupBy(*names)
+        .agg(F.expr(f"sum({SIGN_COL}) AS {SIGN_COL}"))
+        .where(f"{SIGN_COL} <> 0")
+    )
+
+
+def fold_window(
+    state: DataFrame,
+    signed: DataFrame,
+    group_cols: str | list[str],
+    src_cols: list[str],
+    minmax_cols: dict[str, tuple[str, str]],
+    base_current: DataFrame,
+) -> DataFrame:
+    """Advance a :func:`compute_stats` state by a signed change window.
+
+    ``signed`` carries the group and source columns plus an integer
+    ``_sign`` weight (:func:`signed_changes` for a plain view,
+    :func:`net_signed` over :func:`join_deltas` for a join view).  The
+    prior state rows and the window's weighted images are unioned and
+    folded by ONE ``groupBy`` on the group key.  That aggregate yields, per
+    group, the new moment sums and ``_n_rows``, and per MIN/MAX column the
+    maintained extremum, the extremum of the arriving images, the extremum
+    of the departing images, and whether any row departed.  ``groupBy``
+    pairs NULL group keys like any other, so no null-safe join is needed.
+
+    Groups whose ``_n_rows`` reaches 0 drop out.  MIN/MAX are not
+    self-maintainable under deletes (Gupta & Mumick).  A surviving group is
+    *affected* when a departing value ties its maintained extremum, or when
+    that extremum is NULL (every value was NULL) and any row departs.  An
+    unaffected group takes ``least``/``greatest`` of the maintained and
+    arriving extrema.  An affected group's extrema are recomputed from
+    ``base_current`` (the current source, or the current join) restricted
+    to the affected groups by a broadcast null-safe left-semi join.  Those
+    recomputed rows fold back into the state by union and a second
+    ``groupBy``, never by a join.  The result equals a from-scratch
+    :func:`compute_stats` (property-pinned through the view facade)."""
+    names = _cols(group_cols)
+    gcols = [quote(g) for g in names]
+    moments = [quote(c) for c in _moment_cols(src_cols)]
+    w = SIGN_COL
+    images = list(gcols)
+    for c in src_cols:
+        v = f"CAST({quote(c)} AS DOUBLE)"
+        images += [
+            f"{w} * coalesce({v}, 0D) AS {quote(f'__s_{c}')}",
+            f"{w} * coalesce({v} * {v}, 0D) AS {quote(f'__q_{c}')}",
+            f"CAST(IF({v} IS NULL, 0, {w}) AS BIGINT) AS {quote(f'__c_{c}')}",
+        ]
+    images.append(f"CAST({w} AS BIGINT) AS {COUNT_COL}")
+    aggs = [f"sum({m}) AS {m}" for m in moments]
+    aggs.append(f"sum({COUNT_COL}) AS {COUNT_COL}")
+    for m, (fn, src) in minmax_cols.items():
+        arr, dep = quote(f"__arr_{m}"), quote(f"__dep_{m}")
+        images += [
+            f"IF({w} > 0, {quote(src)}, NULL) AS {arr}",
+            f"IF({w} < 0, {quote(src)}, NULL) AS {dep}",
+        ]
+        aggs += [f"{fn}({c}) AS {c}" for c in (quote(m), arr, dep)]
+    if minmax_cols:
+        images.append(f"{w} < 0 AS __departs")
+        aggs.append("bool_or(__departs) AS __departs")
+    folded = (
+        state.unionByName(signed.selectExpr(*images), allowMissingColumns=True)
         .groupBy(*gcols)
-        .agg(
-            *[F.sum(c).alias(f"{c}_delta") for c in mcols],
-            F.sum(COUNT_COL).alias(f"{COUNT_COL}_delta"),
-        )
+        .agg(*[F.expr(a) for a in aggs])
+        .where(f"{COUNT_COL} > 0")
+    )
+    if not minmax_cols:
+        return folded
+
+    affected = " OR ".join(
+        f"coalesce({quote(f'__dep_{m}')} {'<=' if fn == 'min' else '>='} "
+        f"{quote(m)}, {quote(m)} IS NULL AND __departs)"
+        for m, (fn, _src) in minmax_cols.items()
+    )
+    flagged = folded.selectExpr(
+        *gcols, *moments, COUNT_COL,
+        *[
+            f"{'least' if fn == 'min' else 'greatest'}"
+            f"({quote(m)}, {quote(f'__arr_{m}')}) AS {quote(m)}"
+            for m, (fn, _src) in minmax_cols.items()
+        ],
+        f"coalesce({affected}, false) AS __affected",
+    )
+    keys = flagged.where("__affected").selectExpr(
+        *[f"{quote(g)} AS {quote(f'__a_{g}')}" for g in names]
+    )
+    on = " AND ".join(f"{quote(g)} <=> {quote(f'__a_{g}')}" for g in names)
+    recomputed = (
+        base_current.join(F.broadcast(keys), F.expr(on), "left_semi")
+        .groupBy(*gcols)
+        .agg(*[
+            F.expr(f"{fn}({quote(src)}) AS {quote(m)}")
+            for m, (fn, src) in minmax_cols.items()
+        ])
+    )
+    kept = flagged.selectExpr(
+        *gcols, *moments, COUNT_COL,
+        *[
+            f"IF(__affected, NULL, {quote(m)}) AS {quote(m)}"
+            for m in minmax_cols
+        ],
+    )
+    # one row per group carries the moments, the recompute only extrema:
+    # max() passes the moments through, fn() keeps the recomputed extremum
+    return (
+        kept.unionByName(recomputed, allowMissingColumns=True)
+        .groupBy(*gcols)
+        .agg(*[
+            F.expr(a) for a in [
+                *[f"max({m}) AS {m}" for m in moments],
+                *[
+                    f"{fn}({quote(m)}) AS {quote(m)}"
+                    for m, (fn, _src) in minmax_cols.items()
+                ],
+                f"max({COUNT_COL}) AS {COUNT_COL}",
+            ]
+        ])
     )
 
 
@@ -589,31 +597,30 @@ def derive_stats(
     ``__mn_``/``__mx_`` extremum columns verbatim (NULL iff every value in
     the group is NULL).  Variance derives from the moment identity
     (q - s^2/n) / (n - ddof), clamped at 0 against floating cancellation."""
-    cols = []
+    cols = [quote(g) for g in _cols(group_cols)]
     for out, (fn, src) in aggs.items():
         if fn == "count":
-            col = F.col(COUNT_COL) if src == "*" else F.col(f"__c_{src}")
-            cols.append(col.alias(out))
-            continue
-        if fn in ("min", "max"):
-            prefix = "__mn_" if fn == "min" else "__mx_"
-            cols.append(F.col(f"{prefix}{src}").alias(out))
-            continue
-        s, q, n = (F.col(f"__{p}_{src}") for p in ("s", "q", "c"))
-        if fn == "sum":
-            expr = F.when(n > 0, s)
-        elif fn == "avg":
-            expr = F.when(n > 0, s / n)
-        elif fn in ("var_samp", "var_pop", "stddev_samp", "stddev_pop"):
-            ddof = 1 if fn.endswith("_samp") else 0
-            var = F.greatest((q - s * s / n) / (n - ddof), F.lit(0.0))
-            expr = F.when(n > ddof, var)
-            if fn.startswith("stddev"):
-                expr = F.sqrt(expr)
+            expr = COUNT_COL if src == "*" else quote(f"__c_{src}")
+        elif fn in ("min", "max"):
+            expr = quote(("__mn_" if fn == "min" else "__mx_") + src)
         else:
-            raise ValueError(f"unknown aggregate fn {fn!r} for {out!r}")
-        cols.append(expr.alias(out))
-    return state.select(*_cols(group_cols), *cols)
+            s, q, n = (quote(f"__{p}_{src}") for p in ("s", "q", "c"))
+            if fn == "sum":
+                expr = f"CASE WHEN {n} > 0 THEN {s} END"
+            elif fn == "avg":
+                expr = f"CASE WHEN {n} > 0 THEN {s} / {n} END"
+            elif fn in ("var_samp", "var_pop", "stddev_samp", "stddev_pop"):
+                ddof = 1 if fn.endswith("_samp") else 0
+                expr = (
+                    f"CASE WHEN {n} > {ddof} THEN "
+                    f"greatest(({q} - {s} * {s} / {n}) / ({n} - {ddof}), 0D) END"
+                )
+                if fn.startswith("stddev"):
+                    expr = f"sqrt({expr})"
+            else:
+                raise ValueError(f"unknown aggregate fn {fn!r} for {out!r}")
+        cols.append(f"{expr} AS {quote(out)}")
+    return state.selectExpr(*cols)
 
 
 def apply_distinct(

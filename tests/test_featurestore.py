@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row, functions as F
+from pyspark.sql.types import (
+    DoubleType, IntegerType, StringType, StructField, StructType,
+)
 
 from databricks_feature_store_flight_school_spark.featurestore import (
     FeatureLookup,
@@ -15,6 +18,7 @@ from databricks_feature_store_flight_school_spark.featurestore import (
 from databricks_feature_store_flight_school_spark.featurestore.scoring import (
     LinearThresholdModel,
 )
+from databricks_feature_store_flight_school_spark.functions import quote
 
 
 @pytest.fixture()
@@ -1492,6 +1496,78 @@ def test_table_changes_schema_evolution_old_column_null(spark, client):
     assert chg[0]["old_extra"] is None and chg[0]["new_extra"] == 7
     # null-safe compare: v unchanged between v1 and v2, extra NULL -> 7 differs
     assert chg[0]["old_v"] == "a" and chg[0]["new_v"] == "a"
+
+
+def test_table_changes_old_image_of_new_column_is_typed(spark, client):
+    """For a column the older snapshot lacks, old_<c> is a NULL of the
+    newer column's type, not a NULL of type void, so a consumer can union
+    or compare the two images without a cast."""
+    client.create_feature_table(
+        "cdf3", keys="k", df=spark.createDataFrame([Row(k=1, a=1)])
+    )
+    client.write_table(
+        "cdf3",
+        spark.createDataFrame([Row(k=1, a=1, b="x"), Row(k=2, a=2, b="y")]),
+        mode="merge",
+    )
+    chg = client.table_changes("cdf3", 1)
+    assert chg.schema["old_b"].dataType == chg.schema["new_b"].dataType
+    assert chg.schema["old_b"].dataType == StringType()
+    got = {r["k"]: (r["_change_type"], r["old_b"], r["new_b"]) for r in chg.collect()}
+    assert got == {1: ("update", None, "x"), 2: ("insert", None, "y")}
+
+
+def test_change_window_plans_quote_identifiers(spark, client):
+    """Key, group and measure names holding a space, a dot and a backtick
+    survive the SQL-string plans: table_changes and an incremental
+    count/sum/max view refresh (including a delete of a group's current
+    max) both equal a from-scratch recompute."""
+    key, grp, amt = "cust id.`k", "pay.`m ethod", "amt .`x"
+    schema = StructType([
+        StructField(key, IntegerType()), StructField(grp, StringType()),
+        StructField(amt, DoubleType()),
+    ])
+    rows = {i: (f"g{i % 3}", float(i)) for i in range(10)}
+    client.create_feature_table(
+        "odd", keys=key,
+        df=spark.createDataFrame([(k, *v) for k, v in rows.items()], schema),
+    )
+    client.create_materialized_view(
+        "odd_mv", "odd", grp,
+        {"n": ("count", "*"), "total": ("sum", amt), "top": ("max", amt)},
+    )
+    client.refresh_materialized_view("odd_mv")
+    # update moving key 1 to g2, insert key 20, delete key 9 (g0's max)
+    client.write_table(
+        "odd", spark.createDataFrame([(1, "g2", 50.0), (20, "g0", 3.0)], schema)
+    )
+    client.delete_from_table(
+        "odd", spark.createDataFrame([(9,)], StructType([schema[key]]))
+    )
+
+    chg = {
+        r[key]: (r["_change_type"], r[f"old_{grp}"], r[f"new_{amt}"])
+        for r in client.table_changes("odd", 1).collect()
+    }
+    assert chg == {
+        1: ("update", "g1", 50.0), 9: ("delete", "g0", None),
+        20: ("insert", None, 3.0),
+    }
+
+    client.refresh_materialized_view("odd_mv")
+    got = {
+        r[grp]: (r["n"], r["total"], r["top"])
+        for r in client.read_materialized_view("odd_mv").collect()
+    }
+    want = {
+        r[0]: (r[1], r[2], r[3])
+        for r in client.read_table("odd").groupBy(F.col(quote(grp)))
+        .agg(F.count(F.lit(1)), F.sum(F.col(quote(amt))), F.max(F.col(quote(amt))))
+        .collect()
+    }
+    assert got == want == {
+        "g0": (4, 12.0, 6.0), "g1": (2, 11.0, 7.0), "g2": (4, 65.0, 50.0),
+    }
 
 
 def test_consume_changes_offsets_and_redelivery(spark, client):

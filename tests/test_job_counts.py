@@ -1,8 +1,10 @@
 """Deterministic Spark job-count guards for the feature-store small-commit
-path: building a read, a merge, a delete, one materialized-view refresh
-and one incremental online publish.  Job counts do not move with host speed, so a rise here is
-a structural regression (an extra scan, a schema probe, a second evaluation
-of a change window) that wall-clock timing would hide in noise."""
+path: building a read or a change feed, a merge, a delete, two
+materialized-view refreshes (with and without an extremum recompute) and
+one incremental online publish.  Job counts do not move with host speed,
+so a rise here is a structural regression (an extra scan, a schema probe,
+a second evaluation of a change window) that wall-clock timing would hide
+in noise."""
 
 from __future__ import annotations
 
@@ -85,7 +87,7 @@ def test_refresh_materialized_view_job_budget(spark, cycle):
     jobs, _meta = count_jobs(
         spark, lambda: fs.refresh_materialized_view("by_plan")
     )
-    assert jobs <= 14
+    assert jobs <= 6
     got = {
         r["plan"]: (r["n"], r["total"], r["top"])
         for r in fs.read_materialized_view("by_plan").collect()
@@ -95,6 +97,32 @@ def test_refresh_materialized_view_job_budget(spark, cycle):
         "p1": (12, 246.0, 37.0),
         "p2": (13, 358.0, 100.0),
     }
+
+
+def test_refresh_recompute_branch_job_budget(spark, cycle):
+    """A delete of a group's current max sends that group through the
+    bounded recompute against the source: one broadcast of the affected
+    keys and one more aggregate on top of the plain fold."""
+    fs, _spec, _writes = cycle
+    fs.delete_from_table(
+        "svc", spark.createDataFrame([Row(customerID="0000001-CUST")])
+    )
+    jobs, _meta = count_jobs(
+        spark, lambda: fs.refresh_materialized_view("by_plan")
+    )
+    assert jobs <= 7
+    got = {
+        r["plan"]: (r["n"], r["total"], r["top"])
+        for r in fs.read_materialized_view("by_plan").collect()
+    }
+    assert got["p2"] == (12, 258.0, 38.0)
+
+
+def test_table_changes_build_launches_no_job(spark, cycle):
+    fs, _spec, _writes = cycle
+    jobs, df = count_jobs(spark, lambda: fs.table_changes("svc", 1))
+    assert jobs == 0
+    assert df.columns[:2] == ["customerID", "_change_type"]
 
 
 def test_incremental_publish_job_budget(spark, cycle):

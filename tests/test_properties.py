@@ -569,8 +569,9 @@ def test_mv_facade_null_group_key_regression(spark, tmp_path_factory):
         check()
 
 
-#: join churn with NULLable amounts — exercises apply_minmax_signed through
-#: the facade, including the phantom-pair netting (fact+dim double updates)
+#: join churn with NULLable amounts — exercises the join-view extremum fold
+#: through the facade, including the phantom-pair netting (fact+dim double
+#: updates, operators.ivm.net_signed)
 _join_ivm_ops_nullable = st.lists(
     st.one_of(
         st.tuples(st.just("left"), st.lists(
