@@ -25,6 +25,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions import quote
+
 if TYPE_CHECKING:  # pragma: no cover
     from .client import FeatureStoreClient
 
@@ -171,7 +173,7 @@ def _apply_lookup(
                 f"input lacks timestamp_lookup_key column "
                 f"{lookup.timestamp_lookup_key!r}"
             )
-        feat = feat.select(*table_keys, ts_keys[0], *names)
+        feat = feat.select(*[quote(c) for c in (*table_keys, ts_keys[0], *names)])
         for tk, lk in zip(table_keys, lookup_keys):
             if tk != lk:
                 feat = feat.withColumnRenamed(tk, lk)
@@ -189,7 +191,7 @@ def _apply_lookup(
         # the matched observation time is plumbing, not a feature
         return joined.drop(f"{ts_keys[0]}_right")
 
-    feat = feat.select(*table_keys, *names)
+    feat = feat.select(*[quote(c) for c in (*table_keys, *names)])
     # rename feature-table keys to the input's lookup keys so the equi-join
     # condition is a plain column match and the key appears once in output
     for tk, lk in zip(table_keys, lookup_keys):

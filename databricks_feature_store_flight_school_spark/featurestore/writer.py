@@ -308,16 +308,26 @@ def _merge_frames(target: DataFrame, source: DataFrame, keys: list[str]) -> Data
     ANTI join against the source keys (broadcast while the source slice is
     small; AQE falls back to a shuffled anti for genuinely large sources).
     """
-    # rename the join side's keys: target and source frequently share
+    return _without_keys(target, source, keys).unionByName(
+        source, allowMissingColumns=True
+    )
+
+
+def _without_keys(target: DataFrame, keys_df: DataFrame, keys: list[str]) -> DataFrame:
+    """``target`` minus the rows whose key tuple appears in ``keys_df``:
+    a LEFT ANTI join that pairs keys with ``<=>``, so a NULL key (written
+    by a ``validate=False`` merge) matches a NULL key like any other value.
+    Duplicate rows in ``keys_df`` change nothing: an anti join only asks
+    whether a match exists."""
+    # rename the join side's keys: target and keys_df frequently share
     # lineage (an update slice derived from read_table of the same
     # snapshot), where bare attribute references are ambiguous
-    skeys = source.select(*[F.col(quote(k)).alias(f"__sk_{k}") for k in keys])
+    skeys = keys_df.select(*[F.col(quote(k)).alias(f"__sk_{k}") for k in keys])
     cond = reduce(
         lambda a, b: a & b,
         [F.col(quote(k)).eqNullSafe(F.col(quote(f"__sk_{k}"))) for k in keys],
     )
-    kept = target.join(skeys, on=cond, how="left_anti")
-    return kept.unionByName(source, allowMissingColumns=True)
+    return target.join(skeys, on=cond, how="left_anti")
 
 
 def _check_validation_metrics(
@@ -520,8 +530,9 @@ def delete_keys(
     erasure contract).
 
     ``keys_df`` must carry exactly the merge-key columns (extra columns are
-    ignored); deleting keys that do not exist is a no-op for those keys but
-    still commits a version, like Delta's DELETE."""
+    ignored); keys match null-safely, as in merge.  Deleting keys that do
+    not exist is a no-op for those keys but still commits a version, like
+    Delta's DELETE."""
     merge_keys = meta.merge_keys
     missing = [k for k in merge_keys if k not in keys_df.columns]
     if missing:
@@ -529,11 +540,7 @@ def delete_keys(
     if meta.current_version == 0:
         raise ValueError(f"feature table {meta.name} has no data yet")
     target = read_snapshot(keys_df.sparkSession, registry, meta)
-    remaining = target.join(
-        keys_df.select(*[quote(k) for k in merge_keys]).distinct(),
-        on=merge_keys, how="left_anti",
-    )
-    return _publish(registry, meta, remaining)
+    return _publish(registry, meta, _without_keys(target, keys_df, merge_keys))
 
 
 def restore_version(

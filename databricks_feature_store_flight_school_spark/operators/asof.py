@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..functions import quote
+
 _SIDE = "__asof_side"
 
 
@@ -48,6 +50,8 @@ def asof_join(
     is nulled out (the feature-freshness contract — pandas ``merge_asof``'s
     ``tolerance``).  Applied AFTER the window match, so it costs a null-out
     projection, not a second join.
+
+    Every column name is quoted, so names with dots or spaces work.
     """
     keys = [on] if isinstance(on, str) else list(on)
     right_ts = right_ts or left_ts
@@ -63,40 +67,37 @@ def asof_join(
     # atomically: a legitimately-null payload field must not fall back to an
     # older right row's value, which per-column last(ignorenulls) would do.
     packed = F.struct(
-        F.col(right_ts).alias(ts_out),
-        *[F.col(c).alias(payload_out[c]) for c in right_payload],
+        F.col(quote(right_ts)).alias(ts_out),
+        *[F.col(quote(c)).alias(payload_out[c]) for c in right_payload],
     )
     # tag right rows 0 so at equal timestamps they sort BEFORE the left row
     # (inclusive right_ts <= left_ts)
     r = right.select(
-        *[F.col(k) for k in keys],
-        F.col(right_ts).alias("__asof_ts"),
+        *[F.col(quote(k)) for k in keys],
+        F.col(quote(right_ts)).alias("__asof_ts"),
         packed.alias("__asof_payload"),
     ).withColumn(_SIDE, F.lit(0))
 
-    l = left.withColumn("__asof_ts", F.col(left_ts)).withColumn(_SIDE, F.lit(1))
+    l = left.withColumn("__asof_ts", F.col(quote(left_ts))).withColumn(_SIDE, F.lit(1))
 
     unioned = l.unionByName(r, allowMissingColumns=True)
     w = (
-        Window.partitionBy(*keys)
+        Window.partitionBy(*[quote(k) for k in keys])
         .orderBy("__asof_ts", _SIDE)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = F.last("__asof_payload", ignorenulls=True).over(w)
     out = unioned.withColumn("__asof_match", matched).where(F.col(_SIDE) == 1)
+    match = F.col("__asof_match")
     if tolerance_seconds is not None:
         fresh = (
-            F.col("__asof_ts").cast("long")
-            - F.col(f"__asof_match.{ts_out}").cast("long")
+            F.col("__asof_ts").cast("long") - match[ts_out].cast("long")
         ) <= tolerance_seconds
         out = out.withColumn(
-            "__asof_match", F.when(fresh, F.col("__asof_match"))
+            "__asof_match", F.when(fresh, match)
         )
     return out.select(
-        *left.columns,
-        F.col(f"__asof_match.{ts_out}").alias(ts_out),
-        *[
-            F.col(f"__asof_match.{name}").alias(name)
-            for name in payload_out.values()
-        ],
+        *[F.col(quote(c)) for c in left.columns],
+        match[ts_out].alias(ts_out),
+        *[match[name].alias(name) for name in payload_out.values()],
     )

@@ -24,8 +24,10 @@ aggregate and the change window combine in ONE grouped sum:
 images and runs a single ``groupBy`` on the group key — |groups| +
 |changes| rows, never the fact table, and no join against the state.
 MIN/MAX ride the same aggregate; only groups that lose their extremum are
-recomputed.  :func:`apply_deltas` (one full-outer join) remains for callers
-that hold a precomputed delta frame.
+recomputed.  Every maintained aggregate in the engine runs this one fold:
+:func:`compute_stats` bootstraps the state, :func:`signed_changes` (or
+:func:`join_deltas` for a join view) signs the window, :func:`fold_window`
+advances the state and :func:`derive_stats` reads the aggregates out.
 
 Plans built per refresh are SQL strings (``selectExpr`` / ``F.expr``) with
 :func:`quote`-d identifiers: one plan call per operator instead of one
@@ -52,248 +54,6 @@ COUNT_COL = "_n_rows"
 
 def _cols(group_cols: str | list[str]) -> list[str]:
     return [group_cols] if isinstance(group_cols, str) else list(group_cols)
-
-
-def join_groups_null_safe(
-    left: DataFrame, right: DataFrame, gcols: list[str], how: str
-) -> DataFrame:
-    """Group-key join with NULL-safe equality (``<=>``).
-
-    A from-scratch ``groupBy`` keeps a NULL-valued group like any other, but
-    a plain ``on=gcols`` equi-join silently drops it (inner/semi), fails to
-    retire it (anti), or emits it twice unmerged (full_outer) — so every
-    state⨝delta recombination in this module must pair keys with
-    ``eqNullSafe`` instead.  Right's key columns are renamed ``__r_<g>``
-    before the join (the two sides often share lineage — e.g. old/new images
-    of one change feed — where bare attribute references are ambiguous);
-    semi/anti output is ``left`` verbatim, other joins coalesce the two key
-    columns back into a single ``<g>`` (exact under ``<=>``: a pair either
-    matched — equal or both NULL — or one side is absent).  Plan shape is
-    unchanged: ``<=>`` is still a hash-joinable equality, so this stays a
-    co-partitioned shuffle join, not a cross product.
-    """
-    renamed = right
-    for g in gcols:
-        renamed = renamed.withColumnRenamed(g, f"__r_{g}")
-    cond = None
-    for g in gcols:
-        piece = F.col(g).eqNullSafe(F.col(f"__r_{g}"))
-        cond = piece if cond is None else cond & piece
-    out = left.join(renamed, on=cond, how=how)
-    if how in ("left_semi", "semi", "left_anti", "anti"):
-        return out
-    keys = [F.coalesce(F.col(g), F.col(f"__r_{g}")).alias(g) for g in gcols]
-    rest = [
-        F.col(c)
-        for c in out.columns
-        if c not in gcols and c not in {f"__r_{g}" for g in gcols}
-    ]
-    return out.select(*keys, *rest)
-
-
-def agg_deltas(
-    changes: DataFrame, group_cols: str | list[str], measures: dict[str, str]
-) -> DataFrame:
-    """Per-group additive adjustments from a change-feed frame.
-
-    ``measures`` maps output sum-column name -> base value column (the
-    change feed carries it as ``old_<col>`` / ``new_<col>``).  ``group_cols``
-    (one or several base value columns) is likewise read from the images.
-    Returns one row per touched group: the group columns, ``<out>_delta``
-    per measure, ``_n_rows_delta``.
-
-    Null measure values contribute 0 (SQL SUM ignores nulls) but still
-    count toward the row count, matching a from-scratch
-    ``groupBy().agg(sum, count)``.
-
-    Single-pass (r14, guide §2.3): the old/new image sides explode from ONE
-    scan of ``changes`` instead of a union of two selects — ``changes`` is
-    usually a full-outer snapshot diff, and the union form executed that
-    join twice per delta computation (AQE exchange reuse shares the scan
-    shuffles, not the join itself).  Same rows, same group sums.
-    """
-    gcols = _cols(group_cols)
-    old_img = F.struct(
-        *[F.col(f"old_{g}").alias(g) for g in gcols],
-        *[
-            (-F.coalesce(F.col(f"old_{src}"), F.lit(0))).alias(out)
-            for out, src in measures.items()
-        ],
-        F.lit(-1).alias(COUNT_COL),
-    )
-    new_img = F.struct(
-        *[F.col(f"new_{g}").alias(g) for g in gcols],
-        *[
-            (F.coalesce(F.col(f"new_{src}"), F.lit(0))).alias(out)
-            for out, src in measures.items()
-        ],
-        F.lit(1).alias(COUNT_COL),
-    )
-    ct = F.col("_change_type")
-    imgs = (
-        F.when(ct == "update", F.array(old_img, new_img))
-        .when(ct == "delete", F.array(old_img))
-        .when(ct == "insert", F.array(new_img))
-        # unknown change types contributed to neither side in the union
-        # form; explode drops the NULL this leaves
-    )
-    return (
-        changes.select(F.explode(imgs).alias("__img"))
-        .select("__img.*")
-        .groupBy(*gcols)
-        .agg(
-            *[F.sum(out).alias(f"{out}_delta") for out in measures],
-            F.sum(COUNT_COL).alias(f"{COUNT_COL}_delta"),
-        )
-    )
-
-
-def apply_deltas(
-    agg: DataFrame, deltas: DataFrame, group_cols: str | list[str],
-    measure_cols: list[str],
-) -> DataFrame:
-    """Merge an :func:`agg_deltas` frame into the maintained aggregate.
-
-    One full-outer join on ``group_col`` (co-partitioned shuffle sized by
-    |existing groups| + |touched groups|): untouched groups pass through,
-    touched groups add their deltas, brand-new groups materialise from the
-    delta alone, and groups whose maintained count hits zero are dropped —
-    the exact result a from-scratch recompute would produce.
-    """
-    gcols = _cols(group_cols)
-    joined = join_groups_null_safe(agg, deltas, gcols, "full_outer")
-    out_cols = [
-        (
-            F.coalesce(F.col(c), F.lit(0))
-            + F.coalesce(F.col(f"{c}_delta"), F.lit(0))
-        ).alias(c)
-        for c in measure_cols
-    ]
-    new_count = (
-        F.coalesce(F.col(COUNT_COL), F.lit(0))
-        + F.coalesce(F.col(f"{COUNT_COL}_delta"), F.lit(0))
-    )
-    return (
-        joined.select(*gcols, *out_cols, new_count.alias(COUNT_COL))
-        .where(F.col(COUNT_COL) > 0)
-    )
-
-
-def compute_agg(
-    facts: DataFrame, group_cols: str | list[str], measures: dict[str, str]
-) -> DataFrame:
-    """From-scratch twin of the maintained aggregate (bootstrap + the
-    oracle the property test compares against): groupBy + SUM per measure +
-    COUNT, same null-as-zero convention as :func:`agg_deltas`."""
-    return facts.groupBy(*_cols(group_cols)).agg(
-        *[
-            F.sum(F.coalesce(F.col(src), F.lit(0))).alias(out)
-            for out, src in measures.items()
-        ],
-        F.count(F.lit(1)).alias(COUNT_COL),
-    )
-
-
-def compute_minmax(
-    facts: DataFrame, group_col: str | list[str], measures: dict[str, str],
-    agg: str = "min",
-) -> DataFrame:
-    """From-scratch per-group MIN/MAX twin (bootstrap + property oracle)."""
-    f = F.min if agg == "min" else F.max
-    return facts.groupBy(*_cols(group_col)).agg(
-        *[f(src).alias(out) for out, src in measures.items()]
-    )
-
-
-def apply_minmax(
-    maintained: DataFrame,
-    changes: DataFrame,
-    base_current: DataFrame,
-    group_col: str | list[str],
-    measures: dict[str, str],
-    agg: str = "min",
-) -> DataFrame:
-    """Maintain per-group MIN/MAX from a change feed.
-
-    MIN/MAX are NOT self-maintainable under deletes (Gupta & Mumick's
-    distinction): removing a row only matters if it carried the group's
-    current extremum, and then the new extremum is unknowable from the
-    change alone.  The classic strategy, implemented here:
-
-    - NEW images (insert/update) fold in for free:
-      ``ext' = least/greatest(ext, new_value)``.
-    - OLD images (delete/update) mark their OLD group *affected* only when
-      the departing value TIES the maintained extremum; affected groups are
-      recomputed against ``base_current`` — but only those groups (a
-      left-semi join prunes the scan; with partitioning/clustering on the
-      group key this reads |affected| partitions, not the table).
-
-    A group that loses its last row routes through the recompute branch
-    (its last value was its extremum) and drops out naturally, and a
-    brand-new group materialises from its new image alone — so the result
-    matches a from-scratch recompute exactly (property-pinned).
-
-    NULL handling (SQL MIN/MAX ignore NULLs): a departing NULL value never
-    dislodges a non-null extremum, but a group whose maintained extremum is
-    itself NULL (every remaining value is NULL) must route ANY departure
-    through the recompute branch — the tie test ``old <= ext`` is NULL
-    there, and without the explicit ``ext IS NULL`` arm the group would
-    survive as a phantom after its last row is deleted (property-pinned
-    with nullable values).
-    """
-    gcols = _cols(group_col)
-    extf = F.min if agg == "min" else F.max
-    new_ext = (
-        changes.where(F.col("_change_type").isin("insert", "update"))
-        .select(
-            *[F.col(f"new_{g}").alias(g) for g in gcols],
-            *[F.col(f"new_{src}").alias(out) for out, src in measures.items()],
-        )
-        .groupBy(*gcols)
-        .agg(*[extf(out).alias(out) for out in measures])
-    )
-    old_img = changes.where(
-        F.col("_change_type").isin("delete", "update")
-    ).select(
-        *[F.col(f"old_{g}").alias(g) for g in gcols],
-        *[F.col(f"old_{src}").alias(f"__old_{out}") for out, src in measures.items()],
-    )
-    cmp = F.least if agg == "min" else F.greatest
-    hit = None
-    for out in measures:
-        piece = (
-            F.col(f"__old_{out}") <= F.col(out)
-            if agg == "min"
-            else F.col(f"__old_{out}") >= F.col(out)
-        ) | F.col(out).isNull()
-        hit = piece if hit is None else hit | piece
-    affected = (
-        join_groups_null_safe(old_img, maintained, gcols, "inner")
-        .where(hit)
-        .select(*gcols)
-        .distinct()
-    )
-
-    recomputed = compute_minmax(
-        join_groups_null_safe(base_current, affected, gcols, "left_semi"),
-        gcols,
-        {out: src for out, src in measures.items()},
-        agg,
-    )
-    untouched = join_groups_null_safe(maintained, affected, gcols, "left_anti")
-    fresh = join_groups_null_safe(new_ext, affected, gcols, "left_anti")
-    merged = join_groups_null_safe(
-        untouched,
-        fresh.select(
-            *gcols, *[F.col(out).alias(f"__new_{out}") for out in measures]
-        ),
-        gcols,
-        "full_outer",
-    ).select(
-        *gcols,
-        *[cmp(F.col(out), F.col(f"__new_{out}")).alias(out) for out in measures],
-    )
-    return merged.unionByName(recomputed)
 
 
 #: signed-relation sign column (±1) used by the join-view delta algebra
@@ -353,8 +113,8 @@ def join_deltas(
     shuffling |Δ| against the co-keyed base — never base ⨝ base; non-key
     column names must be disjoint across the two inputs (feature-table
     convention).  The result is a signed relation: feed it to
-    :func:`signed_agg_deltas` and then :func:`apply_deltas` to maintain an
-    aggregate over the join at O(|changes|) refresh cost."""
+    :func:`fold_window` to maintain an aggregate over the join at
+    O(|changes|) refresh cost."""
     keys = _cols(on)
     parts = []
     if d_left is not None:
@@ -369,25 +129,6 @@ def join_deltas(
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=False)
     return out
-
-
-def signed_agg_deltas(
-    signed: DataFrame, group_cols: str | list[str], measures: dict[str, str]
-) -> DataFrame:
-    """Per-group aggregate adjustments from a signed relation (the
-    :func:`agg_deltas` analog for :func:`join_deltas` output): each row
-    contributes ``_sign * measure`` (nulls as 0) and ``_sign`` to the row
-    count.  Output feeds :func:`apply_deltas` unchanged."""
-    gcols = _cols(group_cols)
-    return signed.groupBy(*gcols).agg(
-        *[
-            F.sum(
-                F.col(SIGN_COL) * F.coalesce(F.col(src), F.lit(0))
-            ).alias(f"{out}_delta")
-            for out, src in measures.items()
-        ],
-        F.sum(SIGN_COL).alias(f"{COUNT_COL}_delta"),
-    )
 
 
 def _moment_cols(src_cols: list[str]) -> list[str]:
@@ -472,13 +213,14 @@ def fold_window(
     group_cols: str | list[str],
     src_cols: list[str],
     minmax_cols: dict[str, tuple[str, str]],
-    base_current: DataFrame,
+    base_current: DataFrame | None,
 ) -> DataFrame:
     """Advance a :func:`compute_stats` state by a signed change window.
 
     ``signed`` carries the group and source columns plus an integer
     ``_sign`` weight (:func:`signed_changes` for a plain view,
-    :func:`net_signed` over :func:`join_deltas` for a join view).  The
+    :func:`join_deltas` for a join view, netted by :func:`net_signed` when
+    MIN/MAX are maintained).  The
     prior state rows and the window's weighted images are unioned and
     folded by ONE ``groupBy`` on the group key.  That aggregate yields, per
     group, the new moment sums and ``_n_rows``, and per MIN/MAX column the
@@ -495,8 +237,10 @@ def fold_window(
     ``base_current`` (the current source, or the current join) restricted
     to the affected groups by a broadcast null-safe left-semi join.  Those
     recomputed rows fold back into the state by union and a second
-    ``groupBy``, never by a join.  The result equals a from-scratch
-    :func:`compute_stats` (property-pinned through the view facade)."""
+    ``groupBy``, never by a join.  Without MIN/MAX columns nothing is
+    recomputed and ``base_current`` may be ``None``.  The result equals a
+    from-scratch :func:`compute_stats` (property-pinned, directly and
+    through the view facade)."""
     names = _cols(group_cols)
     gcols = [quote(g) for g in names]
     moments = [quote(c) for c in _moment_cols(src_cols)]
@@ -631,49 +375,23 @@ def apply_distinct(
     COUNT DISTINCT is not self-maintainable from the view alone (a
     departing value might or might not still be carried by other rows), but
     becomes so with an *auxiliary view* — the other Gupta & Mumick trick,
-    complementing :func:`apply_minmax`'s bounded recompute: maintain
-    support counts per (group, value) pair, which IS additive
-    (:func:`agg_deltas` over the composite key), and the distinct count is
-    just the number of surviving pairs per group.
+    complementing the bounded MIN/MAX recompute: maintain support counts
+    per (group, value) pair, which IS additive (:func:`fold_window` over
+    the composite key), and the distinct count is just the number of
+    surviving pairs per group.
 
-    Returns ``(aux', derived)``: the updated auxiliary frame (persist this
-    between refreshes) and the derived ``(group, n_distinct)`` view.  Aux
-    size is |group, value| pairs — the same cardinality a from-scratch
-    ``count(DISTINCT)`` must shuffle anyway; refresh cost stays
-    O(|changes|).
+    Returns ``(aux', derived)``: the updated auxiliary frame
+    ``(group, value, _n_rows)`` (persist this between refreshes) and the
+    derived ``(group, n_distinct)`` view.  Aux size is |group, value| pairs
+    — the same cardinality a from-scratch ``count(DISTINCT)`` must shuffle
+    anyway; refresh cost stays O(|changes|).
 
     NULL values are ignored, matching SQL ``COUNT(DISTINCT v)``: an image
     whose value is NULL contributes nothing on that side (so NULL→5 only
     adds support for (g,5), and 5→NULL only retires (g,5))."""
-    old_side = (
-        changes.where(
-            F.col("_change_type").isin("update", "delete")
-            & F.col(f"old_{value_col}").isNotNull()
-        )
-        .select(
-            F.col(f"old_{group_col}").alias(group_col),
-            F.col(f"old_{value_col}").alias(value_col),
-            F.lit(-1).alias(COUNT_COL),
-        )
-    )
-    new_side = (
-        changes.where(
-            F.col("_change_type").isin("update", "insert")
-            & F.col(f"new_{value_col}").isNotNull()
-        )
-        .select(
-            F.col(f"new_{group_col}").alias(group_col),
-            F.col(f"new_{value_col}").alias(value_col),
-            F.lit(1).alias(COUNT_COL),
-        )
-    )
-    deltas = (
-        old_side.unionByName(new_side)
-        .groupBy(group_col, value_col)
-        .agg(F.sum(COUNT_COL).alias(f"{COUNT_COL}_delta"))
-    )
-    aux2 = apply_deltas(aux, deltas, [group_col, value_col], [])
-    derived = aux2.groupBy(group_col).agg(
+    signed = signed_changes(changes, []).where(f"{quote(value_col)} IS NOT NULL")
+    aux2 = fold_window(aux, signed, [group_col, value_col], [], {}, None)
+    derived = aux2.groupBy(quote(group_col)).agg(
         F.count(F.lit(1)).alias("n_distinct")
     )
     return aux2, derived

@@ -445,10 +445,12 @@ def q_fs_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     MOVES orders between customers (every 7th key: +10 and cust -> cust%50,
     exercising the two-sided old-group/new-group adjustment), then a delete
     of every 11th key — and must equal the oracle's from-scratch recompute
-    of the final state.  Refresh cost is O(|changes|) per window (full-outer
-    join on the group key); the base fact table is scanned once at
-    bootstrap and never again."""
-    from ..operators.ivm import agg_deltas, apply_deltas, compute_agg
+    of the final state.  Refresh cost is O(|changes|) per window (one
+    ``groupBy`` over the state and the signed window, ``fold_window``); the
+    base fact table is scanned once at bootstrap and never again."""
+    from ..operators.ivm import (
+        compute_stats, derive_stats, fold_window, signed_changes,
+    )
 
     fs = _client(spark)
     base = load_table(spark, sf_dir, "orders").select(
@@ -457,18 +459,17 @@ def q_fs_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("o_totalprice", 2).alias("amount"),
     )
     fs.create_feature_table("orders_ivm", keys="okey", df=base)
-    measures = {"total": "amount"}
 
-    def consume_into(agg):
-        consumed = fs.consume_changes("orders_ivm", "agg")
-        changes, _v, commit = consumed
-        out = apply_deltas(agg, agg_deltas(changes, "cust", measures),
-                           "cust", list(measures))
+    def consume_into(state):
+        changes, _v, commit = fs.consume_changes("orders_ivm", "agg")
+        out = fold_window(
+            state, signed_changes(changes, "okey"), "cust", ["amount"], {}, None
+        )
         commit()
         return out
 
-    empty = compute_agg(fs.read_table("orders_ivm").limit(0), "cust", measures)
-    agg = consume_into(empty)
+    empty = compute_stats(fs.read_table("orders_ivm").limit(0), "cust", ["amount"])
+    state = consume_into(empty)
 
     update = (
         fs.read_table("orders_ivm")
@@ -480,19 +481,17 @@ def q_fs_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fs.write_table("orders_ivm", update, mode="merge")
-    agg = consume_into(agg)
+    state = consume_into(state)
 
     fs.delete_from_table(
         "orders_ivm",
         fs.read_table("orders_ivm").where(F.col("okey") % 11 == 0).select("okey"),
     )
-    agg = consume_into(agg)
+    state = consume_into(state)
 
-    return agg.select(
-        "cust",
-        F.round("total", 2).alias("total"),
-        F.col("_n_rows").alias("n_rows"),
-    )
+    return derive_stats(
+        state, "cust", {"total": ("sum", "amount"), "n_rows": ("count", "*")}
+    ).select("cust", F.round("total", 2).alias("total"), "n_rows")
 
 
 @register(
@@ -529,12 +528,13 @@ def q_fs_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-keyed base snapshot, never base ⨝ base: at 100 TB the dimension
     churn term reads |changed customers| × their orders, not the fact
     table."""
-    from ..operators.ivm import (
-        apply_deltas, compute_agg, join_deltas, signed_agg_deltas,
-        signed_changes,
-    )
-
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    from ..operators.ivm import (
+        compute_stats, derive_stats, fold_window, join_deltas, signed_changes,
+    )
 
     fs = _client(spark)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -553,27 +553,28 @@ def q_fs_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pair runs as two concurrent Spark jobs (guide §2.6): the second
         # job's tasks back-fill executors idled by the first job's commit
         # tail instead of waiting for it.  Results/versions are identical
-        # to the sequential form.
+        # to the sequential form.  The wrap carries the caller's job group,
+        # description and tags into the pool threads.
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            a, b = pool.submit(fa), pool.submit(fb)
+            a, b = pool.submit(inherit(fa)), pool.submit(inherit(fb))
             a.result(), b.result()
 
     _both(
         lambda: fs.create_feature_table("jv_orders", keys="okey", df=orders),
         lambda: fs.create_feature_table("jv_cust", keys="cust", df=cust),
     )
-    measures = {"total": "amount"}
     vl = vr = 1
 
     def snap(name, v):
         return fs.read_table(name, version=v)
 
-    agg = compute_agg(
+    state = compute_stats(
         snap("jv_orders", vl).join(snap("jv_cust", vr), on="cust"),
-        "segment", measures,
+        "segment", ["amount"],
     )
 
-    def advance(agg):
+    def advance(state):
         nonlocal vl, vr
         nvl = fs.get_feature_table("jv_orders").current_version
         nvr = fs.get_feature_table("jv_cust").current_version
@@ -588,10 +589,7 @@ def q_fs_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         sd = join_deltas(
             d_l, snap("jv_cust", nvr), snap("jv_orders", vl), d_r, on="cust"
         )
-        out = apply_deltas(
-            agg, signed_agg_deltas(sd, "segment", measures),
-            "segment", list(measures),
-        )
+        out = fold_window(state, sd, "segment", ["amount"], {}, None)
         vl, vr = nvl, nvr
         return out
 
@@ -614,7 +612,7 @@ def q_fs_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="merge",
         ),
     )
-    agg = advance(agg).localCheckpoint()
+    state = advance(state).localCheckpoint()
 
     # window 2: two-sided deletes (again independent — overlap)
     _both(
@@ -627,13 +625,11 @@ def q_fs_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             fs.read_table("jv_cust").where(F.col("cust") % 13 == 0).select("cust"),
         ),
     )
-    agg = advance(agg)
+    state = advance(state)
 
-    return agg.select(
-        "segment",
-        F.round("total", 2).alias("total"),
-        F.col("_n_rows").alias("n_orders"),
-    )
+    return derive_stats(
+        state, "segment", {"total": ("sum", "amount"), "n_orders": ("count", "*")}
+    ).select("segment", F.round("total", 2).alias("total"), "n_orders")
 
 
 @register(

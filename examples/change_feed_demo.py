@@ -20,9 +20,10 @@ from databricks_feature_store_flight_school_spark.featurestore import (  # noqa:
     FeatureStoreClient,
 )
 from databricks_feature_store_flight_school_spark.operators import (  # noqa: E402
-    agg_deltas,
-    apply_deltas,
-    compute_agg,
+    compute_stats,
+    derive_stats,
+    fold_window,
+    signed_changes,
 )
 from databricks_feature_store_flight_school_spark.session import get_spark  # noqa: E402
 
@@ -41,16 +42,24 @@ def main() -> None:
     )
 
     # 2. maintain a per-customer aggregate from the change feed: bootstrap
-    #    consumes the snapshot as inserts (offset 0)
-    measures = {"total": "amount"}
-    changes, _v, commit = fs.consume_changes("orders_base", "agg")
-    agg = apply_deltas(
-        compute_agg(fs.read_table("orders_base").limit(0), "cust", measures),
-        agg_deltas(changes, "cust", measures), "cust", list(measures),
-    ).localCheckpoint()
-    commit()
+    #    consumes the snapshot as inserts (offset 0); the state holds the
+    #    moments (sum, sum of squares, non-null count) and the row count
+    aggs = {"total": ("sum", "amount"), "n_rows": ("count", "*")}
+
+    def fold(state):
+        changes, _v, commit = fs.consume_changes("orders_base", "agg")
+        state = fold_window(
+            state, signed_changes(changes, "order_id"), "cust", ["amount"], {},
+            None,
+        ).localCheckpoint()
+        commit()
+        return state
+
+    state = fold(
+        compute_stats(fs.read_table("orders_base").limit(0), "cust", ["amount"])
+    )
     print("bootstrapped aggregate:")
-    agg.orderBy("cust").show()
+    derive_stats(state, "cust", aggs).orderBy("cust").show()
 
     # 3. merge: re-price order 2 and MOVE order 3 to another customer,
     #    insert order 7 — then delete order 1
@@ -70,20 +79,21 @@ def main() -> None:
     fs.table_changes("orders_base", 1).orderBy("order_id").show()
 
     # 5. fold ONLY the new change windows into the aggregate
-    changes, _v, commit = fs.consume_changes("orders_base", "agg")
-    agg = apply_deltas(
-        agg, agg_deltas(changes, "cust", measures), "cust", list(measures)
-    ).localCheckpoint()
-    commit()
+    state = fold(state)
     print("incrementally refreshed aggregate:")
-    agg.orderBy("cust").show()
+    derive_stats(state, "cust", aggs).orderBy("cust").show()
 
     # 6. the invariant the property test pins: incremental == recompute
     want = {
-        r["cust"]: (r["total"], r["_n_rows"])
-        for r in compute_agg(fs.read_table("orders_base"), "cust", measures).collect()
+        r["cust"]: (r["total"], r["n_rows"])
+        for r in fs.read_table("orders_base").groupBy("cust").agg(
+            F.sum("amount").alias("total"), F.count(F.lit(1)).alias("n_rows")
+        ).collect()
     }
-    got = {r["cust"]: (r["total"], r["_n_rows"]) for r in agg.collect()}
+    got = {
+        r["cust"]: (r["total"], r["n_rows"])
+        for r in derive_stats(state, "cust", aggs).collect()
+    }
     assert got == want, (got, want)
 
     # 7. caught-up consumers see None (nothing to re-deliver)

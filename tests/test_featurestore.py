@@ -879,6 +879,22 @@ def test_concurrent_merge_writers_cas(spark, client):
     assert rows[1] == "A" and rows[2] == "B"
 
 
+def test_delete_matches_null_key(spark, client):
+    """A NULL key written by a validate=False merge is deleted by a NULL
+    key, the same null-safe match merge uses."""
+    client.create_feature_table(
+        "nk", keys="k", df=spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    )
+    client.write_table(
+        "nk", spark.createDataFrame([(None, "n")], "k int, v string"), validate=False
+    )
+    assert client.read_table("nk").count() == 3
+    client.delete_from_table(
+        "nk", spark.createDataFrame([(None,), (None,), (2,)], "k int")
+    )
+    assert {tuple(r) for r in client.read_table("nk").collect()} == {(1, "a")}
+
+
 def test_racing_deletes_stage_apart(spark, client, monkeypatch):
     """Two deletes from the same base version in one process: the loser
     stages its rows between the winner's staging write and the winner's
@@ -1568,6 +1584,42 @@ def test_change_window_plans_quote_identifiers(spark, client):
     assert got == want == {
         "g0": (4, 12.0, 6.0), "g1": (2, 11.0, 7.0), "g2": (4, 65.0, 50.0),
     }
+
+
+def test_lookups_quote_identifiers(spark, client):
+    """A lookup key holding a dot and a feature name holding a space
+    survive both retrieval paths: the plain left join and the
+    point-in-time as-of join."""
+    import datetime as dt
+
+    d = dt.datetime
+    key, feat, ts = "cust.id", "f x", "obs.at"
+    client.create_feature_table(
+        "plain_f", keys=key,
+        df=spark.createDataFrame([(1, 10.0), (2, 20.0)], f"`{key}` int, `{feat}` double"),
+    )
+    client.create_feature_table(
+        "pit_f", keys=key, timestamp_keys=ts,
+        df=spark.createDataFrame(
+            [(1, d(2024, 1, 1), 1.0), (1, d(2024, 2, 1), 2.0)],
+            f"`{key}` int, `{ts}` timestamp, `{feat}` double",
+        ),
+    )
+    inputs = spark.createDataFrame(
+        [(1, d(2024, 1, 15)), (3, d(2024, 3, 1))], f"`{key}` int, `ev.ts` timestamp"
+    )
+    plain = client.create_training_set(
+        inputs, [FeatureLookup("plain_f", key)], label=None,
+        exclude_columns=["ev.ts"],
+    ).load_df()
+    assert plain.columns == [key, feat]
+    assert sorted(tuple(r) for r in plain.collect()) == [(1, 10.0), (3, None)]
+    pit = client.create_training_set(
+        inputs, [FeatureLookup("pit_f", key, timestamp_lookup_key="ev.ts")],
+        label=None,
+    ).load_df()
+    assert pit.columns == [key, "ev.ts", feat]
+    assert sorted((r[0], r[2]) for r in pit.collect()) == [(1, 1.0), (3, None)]
 
 
 def test_consume_changes_offsets_and_redelivery(spark, client):

@@ -28,6 +28,9 @@ import check_oracle  # noqa: E402
 
 #: queries added/rewritten in the current round — always checked
 CURRENT_ROUND = [
+    # change-feed aggregates maintained by the one-aggregate IVM fold
+    "q_fs_incremental_agg",
+    "q_fs_ivm_join_view",
     # round 13: sf100-runnable oracle twins (FastSS fuzzy candidates,
     # sharded basket pair aggregation)
     "q_fuzzy_part_match",

@@ -277,11 +277,11 @@ _ivm_ops = st.lists(
 @settings(**_SETTINGS)
 def test_ivm_incremental_equals_recompute(spark, tmp_path_factory, ops, initial):
     """Maintaining a per-group SUM/COUNT aggregate from the change feed
-    (agg_deltas + apply_deltas per consumed window) must equal recomputing
-    it from the final snapshot — through inserts, group-moving updates, and
-    deletes that retire groups entirely."""
-    from databricks_feature_store_flight_school_spark.operators import (
-        agg_deltas, apply_deltas, compute_agg,
+    (signed_changes + fold_window per consumed window) must equal
+    recomputing it from the final snapshot — through inserts, group-moving
+    updates, and deletes that retire groups entirely."""
+    from databricks_feature_store_flight_school_spark.operators.ivm import (
+        compute_stats, derive_stats, fold_window, signed_changes,
     )
 
     client = FeatureStoreClient(spark, str(tmp_path_factory.mktemp("ivm_wh")))
@@ -292,17 +292,19 @@ def test_ivm_incremental_equals_recompute(spark, tmp_path_factory, ops, initial)
             [Row(order_id=k, cust=g, amount=a) for k, (g, a) in rows.items()]
         ),
     )
-    measures = {"total": "amount"}
+
+    def fold(state, changes):
+        return fold_window(
+            state, signed_changes(changes, "order_id"), "cust", ["amount"],
+            {}, None,
+        ).localCheckpoint()
 
     # bootstrap the maintained aggregate from the first consumed window
     # (offset-0 delivers the snapshot as inserts), then fold each later
     # window's deltas in — never rescanning the base table
     changes, _v, commit = client.consume_changes("base", "agg")
-    empty = compute_agg(
-        client.read_table("base").limit(0), "cust", measures
-    )
-    agg = apply_deltas(empty, agg_deltas(changes, "cust", measures),
-                       "cust", list(measures)).localCheckpoint()
+    empty = compute_stats(client.read_table("base").limit(0), "cust", ["amount"])
+    agg = fold(empty, changes)
     commit()
 
     for op, payload in ops:
@@ -327,15 +329,21 @@ def test_ivm_incremental_equals_recompute(spark, tmp_path_factory, ops, initial)
         if consumed is None:
             continue
         changes, _v, commit = consumed
-        agg = apply_deltas(agg, agg_deltas(changes, "cust", measures),
-                           "cust", list(measures)).localCheckpoint()
+        agg = fold(agg, changes)
         commit()
 
     want = {
-        r["cust"]: (r["total"], r["_n_rows"])
-        for r in compute_agg(client.read_table("base"), "cust", measures).collect()
+        r["cust"]: (r["total"], r["n"])
+        for r in client.read_table("base").groupBy("cust").agg(
+            F.sum("amount").alias("total"), F.count(F.lit(1)).alias("n")
+        ).collect()
     }
-    got = {r["cust"]: (r["total"], r["_n_rows"]) for r in agg.collect()}
+    got = {
+        r["cust"]: (r["total"], r["n"])
+        for r in derive_stats(
+            agg, "cust", {"total": ("sum", "amount"), "n": ("count", "*")}
+        ).collect()
+    }
     assert got == want
 
 
@@ -350,7 +358,7 @@ def test_ivm_minmax_affected_group_recompute(spark, tmp_path_factory, ops, initi
     their group through the bounded recompute branch — and the maintained
     frame must equal a from-scratch recompute after every window."""
     from databricks_feature_store_flight_school_spark.operators.ivm import (
-        apply_minmax, compute_minmax,
+        compute_stats, fold_window, signed_changes,
     )
 
     client = FeatureStoreClient(spark, str(tmp_path_factory.mktemp("mm_wh")))
@@ -361,13 +369,22 @@ def test_ivm_minmax_affected_group_recompute(spark, tmp_path_factory, ops, initi
             [Row(order_id=k, cust=g, amount=a) for k, (g, a) in rows.items()]
         ),
     )
-    measures = {"lo": "amount"}
+    minmax_cols = {"__mn_amount": ("min", "amount")}
+
+    def fold(state, changes):
+        return fold_window(
+            state, signed_changes(changes, "order_id"), "cust", [],
+            minmax_cols, client.read_table("base"),
+        ).localCheckpoint()
 
     changes, _v, commit = client.consume_changes("base", "mm")
-    maintained = apply_minmax(
-        compute_minmax(client.read_table("base").limit(0), "cust", measures),
-        changes, client.read_table("base"), "cust", measures, agg="min",
-    ).localCheckpoint()
+    maintained = fold(
+        compute_stats(
+            client.read_table("base").limit(0), "cust", [],
+            minmax_cols=minmax_cols,
+        ),
+        changes,
+    )
     commit()
 
     for op, payload in ops:
@@ -392,26 +409,23 @@ def test_ivm_minmax_affected_group_recompute(spark, tmp_path_factory, ops, initi
         if consumed is None:
             continue
         changes, _v, commit = consumed
-        maintained = apply_minmax(
-            maintained, changes, client.read_table("base"), "cust", measures,
-            agg="min",
-        ).localCheckpoint()
+        maintained = fold(maintained, changes)
         commit()
 
         want = {
             r["cust"]: r["lo"]
-            for r in compute_minmax(
-                client.read_table("base"), "cust", measures
+            for r in client.read_table("base").groupBy("cust").agg(
+                F.min("amount").alias("lo")
             ).collect()
         }
-        got = {r["cust"]: r["lo"] for r in maintained.collect()}
+        got = {r["cust"]: r["__mn_amount"] for r in maintained.collect()}
         assert got == want
 
 
 #: nullable-amount variant of _ivm_ops: NULL measure values exercise the
 #: SQL null semantics of every maintained aggregate at once (SUM/AVG ignore
 #: nulls, MIN/MAX never surface them, and an all-NULL group emptying out
-#: must not leave a phantom extremum row — the apply_minmax NULL arm)
+#: must not leave a phantom extremum row — fold_window's NULL-extremum arm)
 _ivm_ops_nullable = st.lists(
     st.one_of(
         st.tuples(
@@ -902,8 +916,7 @@ def test_ivm_join_view_deltas(spark, tmp_path_factory, ops, init_l, init_r):
     moving nations moves ALL its orders' contributions), and deletes on
     either side — including windows where both sides change at once."""
     from databricks_feature_store_flight_school_spark.operators.ivm import (
-        apply_deltas, compute_agg, join_deltas, signed_agg_deltas,
-        signed_changes,
+        compute_stats, derive_stats, fold_window, join_deltas, signed_changes,
     )
 
     client = FeatureStoreClient(spark, str(tmp_path_factory.mktemp("jivm_wh")))
@@ -921,7 +934,6 @@ def test_ivm_join_view_deltas(spark, tmp_path_factory, ops, init_l, init_r):
             [(c, n) for c, n in rrows.items()], "cust int, nation int"
         ),
     )
-    measures = {"total": "amount"}
 
     def joined(lv, rv):
         return client.read_table("orders_j", version=lv).join(
@@ -929,7 +941,7 @@ def test_ivm_join_view_deltas(spark, tmp_path_factory, ops, init_l, init_r):
         )
 
     vl, vr = 1, 1
-    agg = compute_agg(joined(vl, vr), "nation", measures).localCheckpoint()
+    agg = compute_stats(joined(vl, vr), "nation", ["amount"]).localCheckpoint()
 
     for op, payload in ops:
         if op == "left":
@@ -975,17 +987,23 @@ def test_ivm_join_view_deltas(spark, tmp_path_factory, ops, init_l, init_r):
                 d_r,
                 on="cust",
             )
-            agg = apply_deltas(
-                agg, signed_agg_deltas(sd, "nation", measures),
-                "nation", list(measures),
+            agg = fold_window(
+                agg, sd, "nation", ["amount"], {}, None
             ).localCheckpoint()
         vl, vr = nvl, nvr
 
         want = {
-            r["nation"]: (r["total"], r["_n_rows"])
-            for r in compute_agg(joined(vl, vr), "nation", measures).collect()
+            r["nation"]: (r["total"], r["n"])
+            for r in joined(vl, vr).groupBy("nation").agg(
+                F.sum("amount").alias("total"), F.count(F.lit(1)).alias("n")
+            ).collect()
         }
-        got = {r["nation"]: (r["total"], r["_n_rows"]) for r in agg.collect()}
+        got = {
+            r["nation"]: (r["total"], r["n"])
+            for r in derive_stats(
+                agg, "nation", {"total": ("sum", "amount"), "n": ("count", "*")}
+            ).collect()
+        }
         assert got == want
 
 
